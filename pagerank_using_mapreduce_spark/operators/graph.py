@@ -153,10 +153,11 @@ def connected_components(
         # round — a cadence-4 checkpoint still paid 2^3 analyzer
         # blowup on the late rounds (measured: round cost climbing
         # 0.4 -> 3.5 s between checkpoints at sf0.1).  A LAZY
-        # per-round truncation keeps the plan flat for free: the
-        # truncated frame materializes inside whichever job first
-        # reads it — no extra action, flat ~0.45 s rounds.  Reliable
-        # when checkpoint_dir is set (cluster restart durability).
+        # per-round truncation keeps the plan flat (flat ~0.45 s
+        # rounds) with no dedicated materialization job — though under
+        # AQE the call itself runs the round's shuffle stages
+        # (scale.truncate_lineage).  Reliable when checkpoint_dir is
+        # set (cluster restart durability).
         labels = truncate_lineage(labels, checkpoint_dir)
     return labels
 
@@ -206,9 +207,9 @@ def connected_components_until(
         new_labels = _cc_round(sym, labels)
         # labels is referenced twice per round, so the analyzed
         # plan doubles per round; a LAZY per-round truncation
-        # keeps it flat and the fingerprint action right below
-        # materializes the truncated frame in the same job it was
-        # already paying — measured at sf0.1: the loop fell from
+        # keeps it flat (its shuffle stages run at the call under
+        # AQE; the fingerprint action right below runs the last
+        # stage) — measured at sf0.1: the loop fell from
         # ~15.6 s (persist + cadence-5 eager checkpoints; rounds
         # climbing 0.4 -> 3.5 s from analyzer blowup) to ~6.7 s of
         # flat ~0.45 s rounds.  Old per-round caches become
@@ -276,8 +277,8 @@ def connected_components_star(
     # shuffle fewer bytes).
     from .scale import truncate_lineage
 
-    # lazy checkpoint: the count right below is the materializing
-    # action, so the eager form's dedicated job is redundant
+    # lazy checkpoint: the count right below runs its last stage, so
+    # the eager form's dedicated job is redundant
     edges = truncate_lineage(_canonical_undirected(pages), checkpoint_dir)
     n_edges = edges.count()
     for _ in range(max_rounds):
@@ -323,9 +324,9 @@ def connected_components_star(
             .where(F.col("u") != F.col("v"))
             .distinct()
         )
-        # lazy checkpoint — the stop-test count materializes it in the
-        # same job, one job per round instead of two; reliable when
-        # checkpoint_dir is set
+        # lazy checkpoint — the stop-test count runs its last stage,
+        # so no dedicated materialization job (the shuffle stages run
+        # at the call under AQE); reliable when checkpoint_dir is set
         new_edges = truncate_lineage(ss, checkpoint_dir)
         # stop test, cheapest-first: a count mismatch (one scan of the
         # checkpointed relation) proves change without any join; only
@@ -484,6 +485,7 @@ def _hits_pull(
 
 def hits(
     pages: DataFrame,
+    *,
     iterations: int = HITS_ITERATIONS,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
@@ -542,9 +544,11 @@ def hits(
 
     for i in range(iterations):
         hub_un = _pull(auth, "src", "dst")  # hub(v) = Σ_{v→u} auth(u)
-        # lazy per-iteration checkpoint: the norm action right below
-        # materializes it, truncating the growing auth->hub->auth
-        # lineage every round for free (the old persist + cadence-5
+        # lazy per-iteration checkpoint: truncates the growing
+        # auth->hub->auth lineage every round with no dedicated
+        # materialization job — the norm action right below runs its
+        # last stage, its shuffle stages run at the call under AQE
+        # (scale.truncate_lineage; the old persist + cadence-5
         # eager checkpoints left the analyzed plan growing between
         # checkpoints — see connected_components)
         auth_un = truncate_lineage(
@@ -857,9 +861,9 @@ def kcore_until(
             .where(F.col("deg") >= k)
             .select(F.col("src").alias("title"))
         )
-        # lazy: the stop-rule count right below is the materializing
-        # action — one job per round instead of two; reliable when
-        # checkpoint_dir is set
+        # lazy: the stop-rule count right below runs its last stage,
+        # so no dedicated materialization job (the shuffle stages run
+        # at the call under AQE); reliable when checkpoint_dir is set
         nxt = truncate_lineage(nxt, checkpoint_dir)
         n_now = nxt.count()
         nodes.unpersist()

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.textops import extract_links, extract_text_full, extract_title
+from .scale import adaptive_partitions, truncate_lineage
 
 DAMPING = 0.85
 ITERATIONS = 10
@@ -89,25 +90,103 @@ def edges(pages: DataFrame) -> DataFrame:
     )
 
 
-def _truncate_lineage(df: DataFrame, checkpoint_dir: str | None) -> DataFrame:
-    """S3 twin: eager lineage truncation.  Default is
-    ``localCheckpoint`` — executor-local blocks, fast, but lost with an
-    executor.  With ``checkpoint_dir`` set, a RELIABLE ``checkpoint()``
-    to that filesystem dir (HDFS/S3 on a cluster): iteration state
-    survives executor loss, which is the recipe SCALING.md prescribes
-    for 1000-executor runs — one knob, no code edit."""
-    if checkpoint_dir is None:
-        return df.localCheckpoint(eager=True)
-    df.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
-    return df.checkpoint(eager=True)
+def _stage(pages, n=None, mark_seeds=None, weigh=None):
+    """Stage the static relations once → (titles, e, n).
+
+    ``pages`` is persisted while both relations are built from it (one
+    corpus parse, not one per relation), then released.  ``titles``
+    (hash-partitioned on title) and ``e`` (:func:`edges`, on src) are
+    persisted: a cached relation keeps its output partitioning, so each
+    round shuffles only the small (title, rank) relation, never the
+    adjacency.  Width: the MEASURED page count capped by the configured
+    shuffle width (scale.adaptive_partitions).  ``mark_seeds`` maps the
+    title relation before partitioning (the is_seed flag); ``weigh``
+    maps the partitioned edges (a co-partitioned per-source total — built
+    before the repartition it would add an Exchange)."""
+    pages_c = pages.persist()
+    if n is None:
+        n = pages_c.count()  # A1: pages rows ARE the distinct titles
+    parts = adaptive_partitions(pages.sparkSession, n)
+    titles = pages_c.select("title")
+    if mark_seeds is not None:
+        titles = mark_seeds(titles)
+    titles = titles.repartition(parts, "title").persist()
+    e = edges(pages_c).repartition(parts, "src")
+    if weigh is not None:
+        e = weigh(e)
+    e = e.persist()
+    titles.count()
+    e.count()  # materialize the adjacency once (reference job ②)
+    pages_c.unpersist()
+    return titles, e, n
+
+
+def _empty(titles: DataFrame, *extra) -> DataFrame:
+    """Empty corpus: the reference would divide by zero building 1/N
+    ranks (PageRankAlgorithm.java:302); return no rows instead."""
+    rank = F.lit(0.0).alias("rank")
+    return titles.select("title", rank, *extra).where(F.lit(False))
+
+
+def _rank_round(titles, e, ranks, contrib, teleport, damping) -> DataFrame:
+    """One round, ``join → partial+final sum → left join``: ``contrib``
+    (over aliases ``e``/``r``) is summed per target with map-side
+    partials; the left join FROM ``titles`` (alias ``t``) is the
+    valid-page gate (F3) — phantom targets never survive, linkless pages
+    keep the ``teleport`` baseline via coalesce (the reducer's sum=0
+    path).  Also called by tools/dump_round_plans.py."""
+    contribs = (
+        e.alias("e")
+        .join(ranks.alias("r"), F.col("e.src") == F.col("r.title"))
+        .select(F.col("e.dst").alias("dst"), contrib.alias("contrib"))
+    )
+    mass = contribs.groupBy("dst").agg(F.sum("contrib").alias("mass"))
+    return (
+        titles.alias("t")
+        .join(mass.alias("m"), F.col("t.title") == F.col("m.dst"), "left")
+        .select(
+            F.col("t.title").alias("title"),
+            (
+                teleport
+                + F.lit(damping) * F.coalesce(F.col("m.mass"), F.lit(0.0))
+            ).alias("rank"),
+        )
+    )
+
+
+def _iterate(
+    titles, e, ranks, contrib, teleport, damping, rounds, checkpoint_dir, tol=None
+):
+    """Run up to ``rounds`` rounds → (ranks, rounds_run).  Each round's
+    ranks go through scale.truncate_lineage, so the plan stays one round
+    deep.  ``tol`` adds :func:`pagerank_until`'s stop rule: one driver
+    scalar per round, max |Δrank| over the old/new join."""
+    done = 0
+    for done in range(1, rounds + 1):
+        new = truncate_lineage(
+            _rank_round(titles, e, ranks, contrib, teleport, damping),
+            checkpoint_dir,
+        )
+        converged = (
+            tol is not None
+            and new.alias("n")
+            .join(ranks.alias("o"), "title")
+            .agg(F.max(F.abs(F.col("n.rank") - F.col("o.rank"))).alias("d"))
+            .first()["d"]
+            < tol
+        )
+        ranks = new
+        if converged:
+            break
+    return ranks, done
 
 
 def pagerank(
     pages: DataFrame,
+    *,
     n: int | None = None,
     iterations: int = ITERATIONS,
     damping: float = DAMPING,
-    checkpoint_every: int = 5,
     checkpoint_dir: str | None = None,
     init_ranks: DataFrame | None = None,
 ) -> DataFrame:
@@ -115,19 +194,17 @@ def pagerank(
 
     Scale notes (target: 1000-executor cluster, edges ≫ memory):
     - the static relations (titles, edges) are hash-partitioned on the
-      join key once and persisted; Spark preserves the cached output
-      partitioning, so per-iteration joins only shuffle the small
-      (title, rank) relation;
-    - the contribution sum gets automatic map-side partial aggregation
-      (the combiner the reference never wrote);
-    - lineage is truncated every ``checkpoint_every`` iterations via an
-      eager localCheckpoint (swap for ``checkpoint()`` + a reliable
-      checkpoint dir on a real cluster) — otherwise the plan depth grows
-      linearly and a single task failure recomputes the whole chain.
-      Each eager checkpoint costs one extra materialization, so the
-      cadence is a recompute-risk/latency dial: measured locally at
-      sf0.1, every-3 = 5.8s, every-5 = 3.6s, none = 1.1s for 10
-      iterations; 5 balances that against bounded recovery at scale.
+      join key once and persisted (:func:`_stage`), so per-iteration
+      joins only shuffle the small (title, rank) relation;
+    - lineage is truncated every round (scale.truncate_lineage): a lazy
+      ``localCheckpoint`` by default, so the plan depth stays O(1) and
+      no round pays a dedicated materialization job.  Lazy is not
+      deferred: under AQE the truncation runs each round's shuffle
+      stages when it is called (at sf0.1 on ``local[4]``: 50 jobs
+      while this function runs, 2 on the ``count()`` after it).  With
+      ``checkpoint_dir`` set each round is a RELIABLE checkpoint
+      (restart durability on a cluster), which computes the round a
+      second time when it writes the checkpoint;
     - ``init_ranks`` (a (title, rank) DataFrame) WARM-STARTS the loop
       from a prior state instead of uniform 1/N — the restart path: a
       100 TB job killed at iteration k resumes from its checkpointed
@@ -136,81 +213,26 @@ def pagerank(
       current rank vector).  Proven through the hash gate: warm-start
       4+6 ≡ straight 10 (`i3_warm_start`).
     """
-    from .scale import adaptive_partitions
-
-    spark = pages.sparkSession
-
-    # Stage the parse once: both static relations derive from `pages`,
-    # and materializing their caches independently would re-run the
-    # corpus parse per relation (measured ~2× parse cost at sf0.1).
-    pages_c = pages.persist()
-    if n is None:
-        n = pages_c.count()  # A1/S5: action replaces the Hadoop counter
-        # (pages rows ARE the distinct titles: parse_corpus groupBys)
-    # static caches sized from the MEASURED page count, capped by the
-    # configured shuffle width (guide §2: derive partitioning from
-    # input size, not a constant tuned for one deployment) — every
-    # iteration stage inherits this width, so a 5k-page bench corpus
-    # stops paying 32 scheduling-only tasks per stage while a cluster
-    # run still saturates its configured parallelism.
-    parts = adaptive_partitions(spark, n)
-    titles = pages_c.select("title").repartition(parts, "title").persist()
-    e = edges(pages_c).repartition(parts, "src").persist()
-    titles.count()
-    e.count()  # materialize the adjacency once (reference job ②)
-    pages_c.unpersist()  # the staging cache served its purpose
+    titles, e, n = _stage(pages, n)
     if n == 0:
-        # empty corpus: the reference would divide by zero building
-        # 1/N ranks (PageRankAlgorithm.java:302); return empty instead
-        return titles.select("title", F.lit(0.0).alias("rank")).where(F.lit(False))
-
+        return _empty(titles)
     if init_ranks is not None:
         ranks = init_ranks.select("title", "rank")
     else:
         ranks = titles.select("title", F.lit(1.0 / n).alias("rank"))
-    for i in range(iterations):
-        contribs = (
-            e.alias("e")
-            .join(ranks.alias("r"), F.col("e.src") == F.col("r.title"))
-            .select(
-                F.col("e.dst").alias("dst"),
-                (F.col("r.rank") / F.col("e.outdeg")).alias("contrib"),
-            )
-        )
-        mass = contribs.groupBy("dst").agg(F.sum("contrib").alias("mass"))
-        # Left join FROM pages: valid-page gate (F3) — phantom targets in
-        # `mass` never survive; linkless-but-valid pages get the (1-d)
-        # baseline via coalesce (the reducer's sum=0 path).
-        ranks = (
-            titles.alias("t")
-            .join(mass.alias("m"), F.col("t.title") == F.col("m.dst"), "left")
-            .select(
-                F.col("t.title").alias("title"),
-                (
-                    F.lit(1.0 - damping)
-                    + F.lit(damping) * F.coalesce(F.col("m.mass"), F.lit(0.0))
-                ).alias("rank"),
-            )
-        )
-        if checkpoint_dir is not None:
-            # reliable-checkpoint cadence: cluster restart durability (S3)
-            if (i + 1) % checkpoint_every == 0 and (i + 1) < iterations:
-                ranks = _truncate_lineage(ranks, checkpoint_dir)
-        else:
-            # lazy per-round localCheckpoint: plan depth stays O(1)
-            # instead of growing per round, and the cadence form's
-            # dedicated eager-materialization job disappears (S3 —
-            # the next action materializes the truncated frame)
-            ranks = ranks.localCheckpoint(eager=False)
-    return ranks
+    contrib = F.col("r.rank") / F.col("e.outdeg")
+    teleport = F.lit(1.0 - damping)
+    return _iterate(
+        titles, e, ranks, contrib, teleport, damping, iterations, checkpoint_dir
+    )[0]
 
 
 def weighted_pagerank(
     pages: DataFrame,
+    *,
     n: int | None = None,
     iterations: int = ITERATIONS,
     damping: float = DAMPING,
-    checkpoint_every: int = 5,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Edge-weighted PageRank: a source splits its rank over out-edges
@@ -228,65 +250,21 @@ def weighted_pagerank(
     is identical to the unweighted loop (one join + one partial-agg
     sum over the moving rank relation)."""
     from .graph import edge_weight
-    from .scale import adaptive_partitions
 
-    spark = pages.sparkSession
+    def weigh(e: DataFrame) -> DataFrame:
+        we = e.select("src", "dst", edge_weight(F.col("dst")).alias("w"))
+        wtot = we.groupBy("src").agg(F.sum("w").alias("wout"))
+        return we.join(wtot, "src")  # co-partitioned: no extra shuffle
 
-    pages_c = pages.persist()
-    if n is None:
-        n = pages_c.count()
-    parts = adaptive_partitions(spark, n)  # measured-size static caches
-    titles = pages_c.select("title").repartition(parts, "title").persist()
-    we = (
-        edges(pages_c)
-        .select("src", "dst", edge_weight(F.col("dst")).alias("w"))
-        .repartition(parts, "src")
-    )
-    wtot = we.groupBy("src").agg(F.sum("w").alias("wout"))
-    e = we.join(wtot, "src").persist()  # co-partitioned: no extra shuffle
-    titles.count()
-    e.count()
-    pages_c.unpersist()
+    titles, e, n = _stage(pages, n, weigh=weigh)
     if n == 0:
-        return titles.select("title", F.lit(0.0).alias("rank")).where(F.lit(False))
-
+        return _empty(titles)
     ranks = titles.select("title", F.lit(1.0 / n).alias("rank"))
-    for i in range(iterations):
-        contribs = (
-            e.alias("e")
-            .join(ranks.alias("r"), F.col("e.src") == F.col("r.title"))
-            .select(
-                F.col("e.dst").alias("dst"),
-                (F.col("r.rank") * F.col("e.w") / F.col("e.wout")).alias(
-                    "contrib"
-                ),
-            )
-        )
-        mass = contribs.groupBy("dst").agg(F.sum("contrib").alias("mass"))
-        ranks = (
-            titles.alias("t")
-            .join(mass.alias("m"), F.col("t.title") == F.col("m.dst"), "left")
-            .select(
-                F.col("t.title").alias("title"),
-                (
-                    F.lit(1.0 - damping)
-                    + F.lit(damping) * F.coalesce(F.col("m.mass"), F.lit(0.0))
-                ).alias("rank"),
-            )
-        )
-        if checkpoint_dir is not None:
-            # reliable-checkpoint cadence: cluster restart durability
-            if (i + 1) % checkpoint_every == 0 and (i + 1) < iterations:
-                ranks = _truncate_lineage(ranks, checkpoint_dir)
-        else:
-            # lazy per-round localCheckpoint: plan depth stays O(1)
-            # instead of growing per round (and the cadence form's
-            # dedicated eager-materialization job disappears — the
-            # next action materializes the truncated frame).  Old
-            # rounds' blocks are freed by ContextCleaner as their
-            # frames drop out of the lineage.
-            ranks = ranks.localCheckpoint(eager=False)
-    return ranks
+    contrib = F.col("r.rank") * F.col("e.w") / F.col("e.wout")
+    teleport = F.lit(1.0 - damping)
+    return _iterate(
+        titles, e, ranks, contrib, teleport, damping, iterations, checkpoint_dir
+    )[0]
 
 
 SEED_ISIN_MAX = 64  # above this, seeds go cluster-side via broadcast join
@@ -295,9 +273,9 @@ SEED_ISIN_MAX = 64  # above this, seeds go cluster-side via broadcast join
 def personalized_pagerank(
     pages: DataFrame,
     sources: list[str],
+    *,
     iterations: int = ITERATIONS,
     damping: float = DAMPING,
-    checkpoint_every: int = 5,
     seed_isin_max: int = SEED_ISIN_MAX,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
@@ -308,91 +286,51 @@ def personalized_pagerank(
     (PageRankAlgorithm.java:96-114): same un-normalized update with the
     constant (1-d) term replaced by ``(1-d)/|S|·[v ∈ S]``.
 
-    Same scale skeleton as :func:`pagerank` (static edge relation
-    hash-partitioned once + persisted; only the small rank relation
-    moves per iteration; lineage truncated on a cadence).  Seed-set
-    channel by size: up to ``seed_isin_max`` seeds fold into the plan
-    as an ``isin`` literal (S4 channel — zero extra joins); above
-    that, the seeds become a DataFrame broadcast-joined onto the
-    static title relation ONCE before the loop (an is_seed flag column
-    rides the persisted relation, so the per-iteration plans are
-    identical either way and a million-seed set never serializes into
-    the query plan).
+    Same scale skeleton as :func:`pagerank`.  Seed-set channel by size:
+    up to ``seed_isin_max`` seeds fold into the plan as an ``isin``
+    literal (S4 channel — zero extra joins); above that, the seeds
+    become a DataFrame broadcast-joined onto the static title relation
+    ONCE before the loop (an is_seed flag column rides the persisted
+    relation, so the per-iteration plans are identical either way and a
+    million-seed set never serializes into the query plan).
     """
     if not sources:
         raise ValueError("personalized_pagerank needs a non-empty seed set")
-    from .scale import adaptive_partitions
-
     spark = pages.sparkSession
-    pages_c = pages.persist()
-    parts = adaptive_partitions(spark, pages_c.count())
-    titles = pages_c.select("title")
-    if len(sources) <= seed_isin_max:
-        titles = titles.select(
-            "title", F.col("title").isin(*sources).alias("is_seed")
-        )
-    else:
+
+    def mark_seeds(titles: DataFrame) -> DataFrame:
+        if len(sources) <= seed_isin_max:
+            return titles.select(
+                "title", F.col("title").isin(*sources).alias("is_seed")
+            )
         seeds_df = spark.createDataFrame(
             [(t,) for t in sources], "title string"
         ).withColumn("is_seed", F.lit(True))
-        titles = (
-            titles.join(F.broadcast(seeds_df), "title", "left")
-            .select("title", F.coalesce("is_seed", F.lit(False)).alias("is_seed"))
+        return titles.join(F.broadcast(seeds_df), "title", "left").select(
+            "title", F.coalesce("is_seed", F.lit(False)).alias("is_seed")
         )
-    titles = titles.repartition(parts, "title").persist()
-    e = edges(pages_c).repartition(parts, "src").persist()
-    titles.count()
-    e.count()
-    pages_c.unpersist()
 
+    titles, e, n = _stage(pages, mark_seeds=mark_seeds)
+    if n == 0:
+        return _empty(titles)
     s = float(len(sources))
+    init = F.when(F.col("is_seed"), F.lit(1.0 / s)).otherwise(F.lit(0.0))
+    ranks = titles.select("title", init.alias("rank"))
+    contrib = F.col("r.rank") / F.col("e.outdeg")
     teleport = F.when(
         F.col("t.is_seed"), F.lit((1.0 - damping) / s)
     ).otherwise(F.lit(0.0))
-    init = F.when(F.col("is_seed"), F.lit(1.0 / s)).otherwise(F.lit(0.0))
-    ranks = titles.select("title", init.alias("rank"))
-    for i in range(iterations):
-        contribs = (
-            e.alias("e")
-            .join(ranks.alias("r"), F.col("e.src") == F.col("r.title"))
-            .select(
-                F.col("e.dst").alias("dst"),
-                (F.col("r.rank") / F.col("e.outdeg")).alias("contrib"),
-            )
-        )
-        mass = contribs.groupBy("dst").agg(F.sum("contrib").alias("mass"))
-        ranks = (
-            titles.alias("t")
-            .join(mass.alias("m"), F.col("t.title") == F.col("m.dst"), "left")
-            .select(
-                F.col("t.title").alias("title"),
-                (
-                    teleport
-                    + F.lit(damping) * F.coalesce(F.col("m.mass"), F.lit(0.0))
-                ).alias("rank"),
-            )
-        )
-        if checkpoint_dir is not None:
-            # reliable-checkpoint cadence: cluster restart durability
-            if (i + 1) % checkpoint_every == 0 and (i + 1) < iterations:
-                ranks = _truncate_lineage(ranks, checkpoint_dir)
-        else:
-            # lazy per-round localCheckpoint: plan depth stays O(1)
-            # instead of growing per round (and the cadence form's
-            # dedicated eager-materialization job disappears — the
-            # next action materializes the truncated frame).  Old
-            # rounds' blocks are freed by ContextCleaner as their
-            # frames drop out of the lineage.
-            ranks = ranks.localCheckpoint(eager=False)
-    return ranks
+    return _iterate(
+        titles, e, ranks, contrib, teleport, damping, iterations, checkpoint_dir
+    )[0]
 
 
 def pagerank_until(
     pages: DataFrame,
+    *,
     tol: float = 1e-6,
     max_iterations: int = 50,
     damping: float = DAMPING,
-    checkpoint_every: int = 5,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Convergence-terminated PageRank — an extension the reference
@@ -401,74 +339,24 @@ def pagerank_until(
 
     The delta check is one extra action per iteration (a max over the
     joined old/new relation — small, same partitioning, no extra wide
-    op on the adjacency).  Returns (title, rank, iterations) with the
-    iteration count that achieved convergence on every row.
+    op on the adjacency).  Ranks are referenced twice per round (the
+    contribution join and the delta join), which is why the per-round
+    truncation matters most here: without it the analyzed plan doubles
+    per round.  Returns (title, rank, iterations) with the iteration
+    count that achieved convergence on every row.
     """
-    from .scale import adaptive_partitions
-
-    spark = pages.sparkSession
-
-    pages_c = pages.persist()
-    n = pages_c.count()
-    parts = adaptive_partitions(spark, n)  # measured-size static caches
-    titles = pages_c.select("title").repartition(parts, "title").persist()
-    e = edges(pages_c).repartition(parts, "src").persist()
-    titles.count()
-    e.count()
-    pages_c.unpersist()
+    titles, e, n = _stage(pages)
     if n == 0:
-        # same empty-corpus guard as pagerank(): 1/N is undefined
-        return titles.select(
-            "title", F.lit(0.0).alias("rank"), F.lit(0).alias("iterations")
-        ).where(F.lit(False))
-
-    ranks = titles.select("title", F.lit(1.0 / n).alias("rank")).localCheckpoint(
-        eager=False
+        return _empty(titles, F.lit(0).alias("iterations"))
+    ranks = truncate_lineage(
+        titles.select("title", F.lit(1.0 / n).alias("rank")), checkpoint_dir
     )
-    done = 0
-    for i in range(max_iterations):
-        contribs = (
-            e.alias("e")
-            .join(ranks.alias("r"), F.col("e.src") == F.col("r.title"))
-            .select(
-                F.col("e.dst").alias("dst"),
-                (F.col("r.rank") / F.col("e.outdeg")).alias("contrib"),
-            )
-        )
-        mass = contribs.groupBy("dst").agg(F.sum("contrib").alias("mass"))
-        new_ranks = (
-            titles.alias("t")
-            .join(mass.alias("m"), F.col("t.title") == F.col("m.dst"), "left")
-            .select(
-                F.col("t.title").alias("title"),
-                (
-                    F.lit(1.0 - damping)
-                    + F.lit(damping) * F.coalesce(F.col("m.mass"), F.lit(0.0))
-                ).alias("rank"),
-            )
-        )
-        if checkpoint_dir is not None and (i + 1) % checkpoint_every == 0:
-            # reliable-checkpoint cadence for cluster runs (restart
-            # durability); locally the lazy branch below already
-            # truncates every round
-            new_ranks = _truncate_lineage(new_ranks, checkpoint_dir)
-        else:
-            # ranks is referenced twice per round (the contribution
-            # join and the delta join), so the analyzed plan doubles
-            # per round; the lazy per-round checkpoint keeps it flat
-            # and the delta action materializes it in the job it
-            # already pays (see graph.connected_components_until)
-            new_ranks = new_ranks.localCheckpoint(eager=False)
-        delta = (
-            new_ranks.alias("n")
-            .join(ranks.alias("o"), "title")
-            .agg(F.max(F.abs(F.col("n.rank") - F.col("o.rank"))).alias("d"))
-            .first()["d"]
-        )
-        ranks = new_ranks
-        done = i + 1
-        if delta < tol:
-            break
+    contrib = F.col("r.rank") / F.col("e.outdeg")
+    teleport = F.lit(1.0 - damping)
+    ranks, done = _iterate(
+        titles, e, ranks, contrib, teleport, damping, max_iterations,
+        checkpoint_dir, tol=tol,
+    )
     return ranks.select("title", "rank", F.lit(done).alias("iterations"))
 
 

@@ -66,6 +66,10 @@ def get_spark(
             or os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
         )
         .config("spark.sql.warehouse.dir", warehouse_dir)
+        # reliable loop checkpoints (scale.truncate_lineage with a dir)
+        # are deleted once their RDD is garbage-collected instead of
+        # accumulating, one directory per round, until the dir is wiped
+        .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

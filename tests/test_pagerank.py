@@ -19,9 +19,12 @@ from pagerank_using_mapreduce_spark.operators.pagerank import (
     edges,
     link_graph,
     pagerank,
+    pagerank_until,
     parse_corpus,
+    personalized_pagerank,
     ranking,
     top_k,
+    weighted_pagerank,
 )
 
 CORPUS = [
@@ -117,11 +120,6 @@ def test_rank_floor_invariant(pages):
 
 
 def test_pagerank_until_converges_and_matches_fixed(pages):
-    from pagerank_using_mapreduce_spark.operators.pagerank import (
-        pagerank,
-        pagerank_until,
-    )
-
     out = pagerank_until(pages, tol=2e-3, max_iterations=60)
     iters = out.first()["iterations"]
     assert 0 < iters < 60  # actually converged, not capped
@@ -132,27 +130,31 @@ def test_pagerank_until_converges_and_matches_fixed(pages):
         assert abs(got[t] - want[t]) < 1e-12
 
 
-def test_pagerank_empty_corpus_yields_empty(spark):
+@pytest.mark.parametrize(
+    "run, columns",
+    [
+        (lambda p: pagerank(p, iterations=3), ["title", "rank"]),
+        (lambda p: weighted_pagerank(p, iterations=3), ["title", "rank"]),
+        # a seed set that is not in the (empty) corpus
+        (
+            lambda p: personalized_pagerank(p, ["missing"], iterations=3),
+            ["title", "rank"],
+        ),
+        (
+            lambda p: pagerank_until(p, tol=1e-3, max_iterations=5),
+            ["title", "rank", "iterations"],
+        ),
+    ],
+    ids=["pagerank", "weighted_pagerank", "personalized_pagerank", "pagerank_until"],
+)
+def test_pagerank_family_empty_corpus_yields_empty(spark, run, columns):
     empty = spark.createDataFrame([], "title string, links array<string>")
-    from pagerank_using_mapreduce_spark.operators.pagerank import pagerank
-
-    assert pagerank(empty, iterations=3).count() == 0
-
-
-def test_pagerank_until_empty_corpus_yields_empty(spark):
-    from pagerank_using_mapreduce_spark.operators.pagerank import pagerank_until
-
-    empty = spark.createDataFrame([], "title string, links array<string>")
-    out = pagerank_until(empty, tol=1e-3, max_iterations=5)
+    out = run(empty)
+    assert out.columns == columns
     assert out.count() == 0
-    assert set(out.columns) == {"title", "rank", "iterations"}
 
 
 def test_personalized_pagerank_chain_golden(spark):
-    from pagerank_using_mapreduce_spark.operators.pagerank import (
-        personalized_pagerank,
-    )
-
     chain = spark.createDataFrame(
         [("a", ["b"]), ("b", ["c"]), ("c", [])],
         "title string, links array<string>",
@@ -168,10 +170,6 @@ def test_personalized_pagerank_chain_golden(spark):
 
 
 def test_personalized_pagerank_unreachable_is_zero(spark):
-    from pagerank_using_mapreduce_spark.operators.pagerank import (
-        personalized_pagerank,
-    )
-
     g = spark.createDataFrame(
         [("a", ["b"]), ("b", []), ("z", ["a"])],  # z unreachable FROM {a,b}
         "title string, links array<string>",
@@ -189,11 +187,7 @@ def test_personalized_pagerank_unreachable_is_zero(spark):
 def test_personalized_pagerank_broadcast_seed_path(spark):
     """Above SEED_ISIN_MAX the seed set rides a broadcast join instead
     of a plan literal: identical ranks to the isin path on the same
-    seeds, and the seed attach shows a broadcast in its plan."""
-    from pagerank_using_mapreduce_spark.operators.pagerank import (
-        parse_corpus,
-        personalized_pagerank,
-    )
+    seeds, and the operator's own plan shows the broadcast attach."""
     from pagerank_using_mapreduce_spark.sources.tables import load_table
     from pagerank_using_mapreduce_spark.sources.wikicorpus import wiki_corpus
 
@@ -204,35 +198,11 @@ def test_personalized_pagerank_broadcast_seed_path(spark):
         for r in pages.select("title").orderBy("title").limit(100).collect()
     ]
     assert len(seeds) == 100  # > SEED_ISIN_MAX -> broadcast path
-    via_broadcast = personalized_pagerank(pages, seeds, iterations=3)
-    # the returned frame is lineage-truncated (per-round lazy
-    # localCheckpoint, r11), so the broadcast seed attach is asserted
-    # on the STATIC titles relation it rides: rebuild the same attach
-    # expression the operator plans before its loop
-    from pyspark.sql import functions as F
-
-    seeds_df = spark.createDataFrame(
-        [(t,) for t in seeds], "title string"
-    ).withColumn("is_seed", F.lit(True))
-    attach = pages.select("title").join(
-        F.broadcast(seeds_df), "title", "left"
-    )
+    # zero rounds: the initial ranks read the persisted title relation,
+    # whose cached plan carries the seed attach
+    attach = personalized_pagerank(pages, seeds, iterations=0, seed_isin_max=0)
     assert "BroadcastHashJoin" in attach._jdf.queryExecution().toString()
-    # the rebuilt expression above proves the ATTACH SHAPE broadcasts;
-    # additionally pin that the operator itself still plants the hint
-    # (ADVICE r11: a regression dropping F.broadcast inside the
-    # operator would otherwise pass this test unnoticed)
-    import importlib
-    import inspect
-
-    # operators/__init__ re-exports the pagerank FUNCTION under the
-    # module's name, so import the module explicitly
-    _pr = importlib.import_module(
-        "pagerank_using_mapreduce_spark.operators.pagerank"
-    )
-    assert "F.broadcast(seeds_df)" in inspect.getsource(
-        _pr.personalized_pagerank
-    )
+    via_broadcast = personalized_pagerank(pages, seeds, iterations=3)
     via_isin = personalized_pagerank(
         pages, seeds, iterations=3, seed_isin_max=1000
     )
@@ -248,24 +218,19 @@ def test_pagerank_reliable_checkpoint_dir(spark, tmp_path):
     same ranks, and RDD checkpoint files actually land in the dir."""
     import os
 
-    from pagerank_using_mapreduce_spark.operators.pagerank import (
-        pagerank,
-        parse_corpus,
-    )
     from pagerank_using_mapreduce_spark.sources.tables import load_table
     from pagerank_using_mapreduce_spark.sources.wikicorpus import wiki_corpus
 
     ckpt = str(tmp_path / "ckpt")
     docs = load_table(spark, "/root/testdata/sf0.001", "documents")
     pages = parse_corpus(wiki_corpus(docs, docs.count())).persist()
-    reliable = pagerank(pages, iterations=6, checkpoint_every=2,
-                        checkpoint_dir=ckpt)
+    reliable = pagerank(pages, iterations=6, checkpoint_dir=ckpt)
     got = {r["title"]: r["rank"] for r in reliable.collect()}
     # checkpoint files were written under the dir
     files = [os.path.join(dp, f) for dp, _, fs in os.walk(ckpt) for f in fs]
     assert files, "no reliable checkpoint files written"
     want = {r["title"]: r["rank"]
-            for r in pagerank(pages, iterations=6, checkpoint_every=2).collect()}
+            for r in pagerank(pages, iterations=6).collect()}
     assert got == want
     pages.unpersist()
 
@@ -278,9 +243,6 @@ def test_pagerank_reliable_checkpoint_dir(spark, tmp_path):
 def test_weighted_pagerank_golden_one_iteration(spark):
     """a links to 'b' (len 1 -> w=2) and 'ccc' (len 3 -> w=4), wout=6:
     b = 0.15 + 0.85*(1/3 * 2/6);  ccc = 0.15 + 0.85*(1/3 * 4/6)."""
-    from pagerank_using_mapreduce_spark.operators.pagerank import (
-        weighted_pagerank,
-    )
 
     g = spark.createDataFrame(
         [("a", ["b", "ccc"]), ("b", []), ("ccc", [])],
@@ -297,9 +259,6 @@ def test_weighted_pagerank_equal_weights_match_plain(spark):
     char -> w=2, no phantoms — the golden corpus's 'Ghost' is len 5,
     weight 1, so it would NOT qualify), the weighted split collapses
     to 1/outdeg and the result must equal plain pagerank."""
-    from pagerank_using_mapreduce_spark.operators.pagerank import (
-        weighted_pagerank,
-    )
 
     g = spark.createDataFrame(
         [("a", ["b", "c"]), ("b", ["a"]), ("c", ["c", "a"])],

@@ -43,6 +43,20 @@ def test_truncate_lineage_switch(spark, tmp_path):
     assert _ckpt_files(d), "no reliable checkpoint files written"
 
 
+def test_truncate_lineage_sets_checkpoint_dir_once(spark, tmp_path):
+    """Every setCheckpointDir call creates a fresh UUID subdirectory;
+    repeated reliable truncations into one dir must reuse the first."""
+    from pagerank_using_mapreduce_spark.operators.scale import (
+        truncate_lineage,
+    )
+
+    d = str(tmp_path / "once")
+    df = spark.range(10)
+    for ckpt in (d, d, d + "/"):
+        assert truncate_lineage(df, ckpt, eager=True).count() == 10
+    assert len(os.listdir(d)) == 1
+
+
 def test_cc_reliable_checkpoint_dir(spark, tmp_path):
     """connected_components with checkpoint_dir: identical labels to
     the default path, and checkpoint files land in the dir (the lazy
@@ -58,12 +72,9 @@ def test_cc_reliable_checkpoint_dir(spark, tmp_path):
         (r["title"], r["component"])
         for r in connected_components(pages, iterations=3).collect()
     }
-    got = {
-        (r["title"], r["component"])
-        for r in connected_components(
-            pages, iterations=3, checkpoint_dir=d
-        ).collect()
-    }
+    # hold the frame: checkpoints are reclaimed once unreferenced
+    out = connected_components(pages, iterations=3, checkpoint_dir=d)
+    got = {(r["title"], r["component"]) for r in out.collect()}
     assert got == want
     assert _ckpt_files(d), "no reliable checkpoint files written"
     pages.unpersist()
@@ -81,9 +92,8 @@ def test_kcore_and_truss_reliable_checkpoint_dir(spark, tmp_path):
     pages = _pages(spark).persist()
     d1 = str(tmp_path / "kcore")
     want = {r["title"] for r in kcore_until(pages).collect()}
-    got = {
-        r["title"] for r in kcore_until(pages, checkpoint_dir=d1).collect()
-    }
+    out = kcore_until(pages, checkpoint_dir=d1)  # held, see cc test
+    got = {r["title"] for r in out.collect()}
     assert got == want
     assert _ckpt_files(d1)
 
@@ -93,10 +103,8 @@ def test_kcore_and_truss_reliable_checkpoint_dir(spark, tmp_path):
         (r["a"], r["b"], r["support"])
         for r in truss_edges(edges_ab).collect()
     }
-    got_t = {
-        (r["a"], r["b"], r["support"])
-        for r in truss_edges(edges_ab, checkpoint_dir=d2).collect()
-    }
+    out_t = truss_edges(edges_ab, checkpoint_dir=d2)
+    got_t = {(r["a"], r["b"], r["support"]) for r in out_t.collect()}
     assert got_t == want_t
     assert _ckpt_files(d2)
     pages.unpersist()
@@ -120,10 +128,8 @@ def test_cluster_pairs_reliable_checkpoint_dir(spark, tmp_path):
         (r["doc_id"], r["canonical_id"])
         for r in cluster_pairs(docs, pairs).collect()
     }
-    got = {
-        (r["doc_id"], r["canonical_id"])
-        for r in cluster_pairs(docs, pairs, checkpoint_dir=d).collect()
-    }
+    out = cluster_pairs(docs, pairs, checkpoint_dir=d)  # held, see cc test
+    got = {(r["doc_id"], r["canonical_id"]) for r in out.collect()}
     assert got == want == {
         (0, 0), (1, 1), (2, 1), (3, 1), (4, 4), (5, 5), (6, 5), (7, 7)
     }
@@ -319,3 +325,18 @@ def test_hits_signature_dropped_dead_cadence_param(spark):
     params = inspect.signature(hits).parameters
     assert "checkpoint_every" not in params
     assert "checkpoint_dir" in params
+
+
+def test_loop_knobs_are_keyword_only(spark):
+    """hits(pages, 10, "/tmp/x") used to bind the dir positionally;
+    the knobs after ``pages`` are keyword-only now."""
+    import pytest
+
+    from pagerank_using_mapreduce_spark.operators.graph import hits
+    from pagerank_using_mapreduce_spark.operators.pagerank import pagerank
+
+    pages = spark.createDataFrame([], "title string, links array<string>")
+    with pytest.raises(TypeError):
+        hits(pages, 10, "/tmp/x")
+    with pytest.raises(TypeError):
+        pagerank(pages, 5, 10)

@@ -1,5 +1,5 @@
 """Dump the TRUE per-round `.explain("formatted")` plans for the
-iterative loop family (cc / hits / truss).
+iterative loop family (pagerank / cc / hits / truss).
 
 Usage: python tools/dump_round_plans.py <outdir> [--round=K] [--suffix=]
 
@@ -8,9 +8,9 @@ RETURN explains to a flat leaf — "Exchange count 0" in that dump is
 truncation, not shuffle removal (VERDICT r11 §what's-wrong #5).  The
 honest structural evidence is the plan of ROUND K ITSELF: state built
 by running K-1 real rounds through the operators' own extracted round
-builders (graph._cc_round / _hits_pull / _truss_round — the loops call
-the same functions), then the round-K expression captured BEFORE its
-truncation.  A healthy loop shows the same small plan at every K; a
+builders (pagerank._rank_round, graph._cc_round / _hits_pull /
+_truss_round — the loops call the same functions), then the round-K
+expression captured BEFORE its truncation.  A healthy loop shows the same small plan at every K; a
 broken one shows the plan doubling/tripling with K.
 """
 
@@ -32,6 +32,10 @@ from pagerank_using_mapreduce_spark.operators.graph import (  # noqa: E402
     cocitation_edges,
 )
 from pagerank_using_mapreduce_spark.operators.pagerank import (  # noqa: E402
+    DAMPING,
+    _iterate,
+    _rank_round,
+    _stage,
     parse_corpus,
 )
 from pagerank_using_mapreduce_spark.operators.scale import (  # noqa: E402
@@ -75,6 +79,20 @@ def main() -> int:
             f.write(f"-- shape: {shape_summary(plan)}\n\n")
             f.write(plan)
         print(f"{name} round {k}: {shape_summary(plan)}")
+
+    # ---- pagerank: K-1 real rounds through the operator's own loop,
+    # then round K un-truncated
+    titles_p, e_p, n_p = _stage(pages)
+    ranks = titles_p.select("title", F.lit(1.0 / n_p).alias("rank"))
+    contrib = F.col("r.rank") / F.col("e.outdeg")
+    teleport = F.lit(1.0 - DAMPING)
+    ranks, _ = _iterate(
+        titles_p, e_p, ranks, contrib, teleport, DAMPING, k - 1, None
+    )
+    dump(
+        "i1_pagerank10",
+        _rank_round(titles_p, e_p, ranks, contrib, teleport, DAMPING),
+    )
 
     # ---- cc: K-1 real rounds (lazy-truncated, materialized by a
     # count, exactly the operator's shape), then round K un-truncated
