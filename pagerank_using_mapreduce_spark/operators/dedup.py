@@ -30,10 +30,13 @@ table, making the expected output non-trivial and hash-checkable.
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.textops import strip_non_alpha, tokens
+from .scale import adaptive_partitions, iterate, label_fixpoint, truncate_lineage
 
 # Augmented-copy id offsets sit far above any real doc_id so the two
 # id spaces can never collide — 1e9 clears even the synthetic sf10
@@ -1031,44 +1034,52 @@ CLUSTER_ROUNDS = 6  # ORACLE unroll depth only: min-label propagation
 MAX_CLUSTER_ROUNDS = 50  # convergence-loop safety cap
 
 
+def _pull_min(sym: DataFrame, labels: DataFrame) -> DataFrame:
+    """ONE min-label round: labels pulled across the symmetric pair
+    relation and min-merged with the current labels."""
+    pulled = (
+        sym.alias("e")
+        .join(labels.alias("l"), F.col("e.doc_b") == F.col("l.doc_id"))
+        .select(F.col("e.doc_a").alias("doc_id"), F.col("l.label").alias("label"))
+    )
+    return (
+        labels.unionAll(pulled)
+        .groupBy("doc_id")
+        .agg(F.min("label").alias("label"))
+    )
+
+
 def cluster_pairs(
     docs: DataFrame,
     pairs: DataFrame,
+    *,
     max_rounds: int = MAX_CLUSTER_ROUNDS,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Transitive closure of an explicit near-dup pair relation to the
     FIXPOINT: min-label propagation with a zero-changes stop rule (the
-    same stop rule as ``graph.connected_components_until``), so a chain
-    of ANY length collapses fully — no fixed round budget to outgrow.
+    same stop rule as ``graph.connected_components_until``,
+    operators.scale.label_fixpoint), so a chain of ANY length collapses
+    fully — no fixed round budget to outgrow.
 
     Scale shape: the pair graph is a tiny fraction of the corpus (only
     LSH-verified near-dups), so the min-label iteration runs on the
     pair-member subset; the full corpus only appears in the final left
     join that fills in singletons.  Per round: one join into the
     (persisted) symmetric pair relation + one min-agg + ONE NARROW
-    fingerprint aggregate for the stop test — the exact old-vs-new
-    label join runs only when consecutive Σ xxhash64(doc_id, label)
-    fingerprints match (labels are min-monotone, so multiset equality
-    ⟺ no change; the join guards the astronomically-unlikely sum
-    collision) — the cc_converged count-first discipline on an
-    O(|pairs|) relation.
+    fingerprint aggregate for the stop test — the cc_converged
+    count-first discipline on an O(|pairs|) relation.
 
     ``checkpoint_dir``: reliable per-round checkpoints instead of
-    executor-local blocks (operators.scale.truncate_lineage).
+    executor-local blocks (operators.scale.iterate).
     """
-    from .scale import truncate_lineage
-
     pairs = pairs.select("doc_a", "doc_b").persist()
     # size the iteration's partitioning from the MEASURED pair count
     # (pairs is already persisted, so the count is one cheap action):
     # near-dup graphs are a sliver of the corpus, and iterating a
     # few-hundred-row relation across 32-partition shuffles is all
     # overhead.  ~100k pair rows per partition keeps tasks meaty.
-    n_pairs = pairs.count()
-    spark = docs.sparkSession
-    shuffle = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    parts = max(1, min(shuffle, n_pairs // 100_000 + 1))
+    parts = adaptive_partitions(docs.sparkSession, pairs.count(), 100_000)
     sym = (
         pairs.unionAll(
             pairs.select(
@@ -1078,83 +1089,44 @@ def cluster_pairs(
         .repartition(parts, "doc_b")
         .persist()
     )
-    labels = (
+    # truncated, not persisted: a checkpoint frame is a flat leaf the
+    # cache manager can never hand this round's state to a later
+    # repetition of the query (honest reps — the r07 persist leak)
+    labels = truncate_lineage(
         sym.select(F.col("doc_a").alias("doc_id"))
         .distinct()
         .withColumn("label", F.col("doc_id"))
-        .repartition(parts, "doc_id")
+        .repartition(parts, "doc_id"),
+        checkpoint_dir,
     )
-    # lazy truncation, not persist: checkpoint frames are flat
-    # leaves, so (a) the per-round doubled references to `labels`
-    # stop doubling the analyzed plan and (b) the cache manager can
-    # never hand this round's state to a later repetition of the
-    # query (honest reps — the r07 persist leak).  Blocks are freed
-    # when the frames are GC'd; reliable when checkpoint_dir is set.
-    labels = truncate_lineage(labels, checkpoint_dir)
-    def _fingerprint(lbl: DataFrame) -> int:
-        # decimal(38) sum: n·2^63 overflows a long under ANSI mode
-        return lbl.agg(
-            F.sum(F.xxhash64("doc_id", "label").cast("decimal(38,0)"))
-        ).collect()[0][0]
-
-    fp = _fingerprint(labels)
-    for i in range(max_rounds):
-        pulled = (
-            sym.alias("e")
-            .join(labels.alias("l"), F.col("e.doc_b") == F.col("l.doc_id"))
-            .select(F.col("e.doc_a").alias("doc_id"), F.col("l.label").alias("label"))
-        )
-        new_labels = (
-            labels.unionAll(pulled)
-            .groupBy("doc_id")
-            .agg(F.min("label").alias("label"))
-        )
-        # labels is referenced twice per round (pull + union), so
-        # the analyzed plan doubles per round; the lazy per-round
-        # truncation keeps it flat with no dedicated materialization
-        # job (under AQE its shuffle stages run at the call, the
-        # fingerprint action below runs the last stage; see
-        # graph.connected_components_until — measured there: rounds
-        # flat ~0.45 s instead of climbing 0.4 -> 3.5 s).  Reliable
-        # when checkpoint_dir is set.
-        new_labels = truncate_lineage(new_labels, checkpoint_dir)
-        new_fp = _fingerprint(new_labels)
-        converged = False
-        if new_fp == fp:
-            converged = (
-                new_labels.alias("n")
-                .join(labels.alias("o"), "doc_id")
-                .where(F.col("n.label") != F.col("o.label"))
-                .count()
-                == 0
-            )
-        labels = new_labels
-        fp = new_fp
-        if converged:
-            break
+    labels, _ = iterate(
+        labels,
+        partial(_pull_min, sym),
+        rounds=max_rounds,
+        checkpoint_dir=checkpoint_dir,
+        stop=label_fixpoint(labels, "doc_id", "label"),
+    )
     # labels is a checkpointed frame (materialized by the fingerprint
     # actions, lineage already cut); release the persisted staging
     # relations before returning.  Nothing label-related stays in the
-    # CACHE MANAGER (checkpoint frames are not plan-matchable), so a
-    # warm repetition of the query re-pays pair-finding honestly, as
-    # a fresh 100-TB run would (the r07 persist-leak rule).
-    final = labels
+    # CACHE MANAGER, so a warm repetition of the query re-pays
+    # pair-finding honestly, as a fresh 100-TB run would.
     sym.unpersist()
     pairs.unpersist()
-    out = (
+    return (
         docs.select("doc_id")
-        .join(final, "doc_id", "left")
+        .join(labels, "doc_id", "left")
         .select(
             "doc_id",
             F.coalesce(F.col("label"), F.col("doc_id")).alias("canonical_id"),
         )
         .withColumn("is_canonical", F.col("doc_id") == F.col("canonical_id"))
     )
-    return out
 
 
 def dedup_clusters(
     docs: DataFrame,
+    *,
     max_rounds: int = MAX_CLUSTER_ROUNDS,
     sha: DataFrame | None = None,
     checkpoint_dir: str | None = None,
@@ -1165,7 +1137,10 @@ def dedup_clusters(
     pair map to themselves.  ``sha``: caller-materialized shingle base
     (see :func:`near_dup_pipeline`)."""
     return cluster_pairs(
-        docs, near_dup_pipeline(docs, sha), max_rounds, checkpoint_dir
+        docs,
+        near_dup_pipeline(docs, sha),
+        max_rounds=max_rounds,
+        checkpoint_dir=checkpoint_dir,
     )
 
 
@@ -1224,7 +1199,7 @@ def dedup_weights(
     """(doc_id, canonical_id, cluster_size, weight_e6): soft-dedup
     sampling weight 1/cluster_size per document (singletons weigh
     1.0).  Sum of weights == number of distinct clusters."""
-    labels = dedup_clusters(docs, max_rounds, sha)
+    labels = dedup_clusters(docs, max_rounds=max_rounds, sha=sha)
     sizes = labels.groupBy("canonical_id").agg(
         F.count("*").cast("long").alias("cluster_size")
     )
@@ -1285,7 +1260,9 @@ def dedup_keep_best(
     can never drop docs or crown by forfeit."""
     from pyspark.sql import Window
 
-    cl = cluster_pairs(docs, near_dup_pipeline(docs, sha), max_rounds)
+    cl = cluster_pairs(
+        docs, near_dup_pipeline(docs, sha), max_rounds=max_rounds
+    )
     scored = cl.join(
         scores.select("doc_id", "quality_e6"), "doc_id", "left"
     )

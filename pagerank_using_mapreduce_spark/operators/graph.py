@@ -16,10 +16,20 @@ DuckDB oracle unroll the same recurrence exactly.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from functools import partial
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .pagerank import edges
+from .scale import (
+    cache,
+    iterate,
+    label_fixpoint,
+    staged,
+    truncate_lineage,
+    unchanged,
+)
 
 CC_ITERATIONS = 8
 
@@ -79,21 +89,15 @@ def _canonical_undirected(pages: DataFrame) -> DataFrame:
     ).distinct()
 
 
-def _cc_stage(pages: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Shared staging for the hash-min components loops: the parse is
-    staged once, and the (titles, sym) static caches are
-    hash-partitioned at the measured width (guide §2)."""
-    from .scale import adaptive_partitions
-
-    spark = pages.sparkSession
-    pages_c = pages.persist()
-    parts = adaptive_partitions(spark, pages_c.count())
-    titles = pages_c.select("title").repartition(parts, "title").persist()
-    sym = undirected_edges(pages_c, key="src", num_partitions=parts).persist()
-    titles.count()
-    sym.count()
-    pages_c.unpersist()
-    return titles, sym
+def _cc_stage(pages: DataFrame, key: str = "src") -> list[DataFrame]:
+    """The label loops' static caches (titles, sym), staged once and
+    hash-partitioned at the measured width (guide §2); ``sym`` is keyed
+    on the column the round joins the labels on."""
+    with staged(pages) as (p, parts, _):
+        return cache(
+            p.select("title").repartition(parts, "title"),
+            undirected_edges(p, key=key, num_partitions=parts),
+        )
 
 
 def _cc_round(sym: DataFrame, labels: DataFrame) -> DataFrame:
@@ -126,6 +130,7 @@ def _cc_round(sym: DataFrame, labels: DataFrame) -> DataFrame:
 
 def connected_components(
     pages: DataFrame,
+    *,
     iterations: int = CC_ITERATIONS,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
@@ -140,30 +145,17 @@ def connected_components(
 
     ``checkpoint_dir``: when set, the per-round lineage truncation is a
     RELIABLE checkpoint to that dir instead of executor-local blocks —
-    iteration state survives executor loss (scale.truncate_lineage).
+    iteration state survives executor loss (scale.iterate).
     """
-    from .scale import truncate_lineage
-
     titles, sym = _cc_stage(pages)
     labels = titles.select("title", F.col("title").alias("component"))
-    for i in range(iterations):
-        labels = _cc_round(sym, labels)
-        # labels is referenced TWICE per round (the neighbor join
-        # and the merge), so the analyzed logical plan DOUBLES per
-        # round — a cadence-4 checkpoint still paid 2^3 analyzer
-        # blowup on the late rounds (measured: round cost climbing
-        # 0.4 -> 3.5 s between checkpoints at sf0.1).  A LAZY
-        # per-round truncation keeps the plan flat (flat ~0.45 s
-        # rounds) with no dedicated materialization job — though under
-        # AQE the call itself runs the round's shuffle stages
-        # (scale.truncate_lineage).  Reliable when checkpoint_dir is
-        # set (cluster restart durability).
-        labels = truncate_lineage(labels, checkpoint_dir)
-    return labels
+    step = partial(_cc_round, sym)
+    return iterate(labels, step, rounds=iterations, checkpoint_dir=checkpoint_dir)[0]
 
 
 def connected_components_until(
     pages: DataFrame,
+    *,
     max_iterations: int = 50,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
@@ -172,72 +164,81 @@ def connected_components_until(
     the fixed-k variant stops at k regardless.  On the synthetic corpus
     the fixpoint lands around k≈10-12, scaling ~log N).
 
-    Stop test (the cc_star count-first discipline applied to labels):
-    per round ONE narrow aggregate — the label-multiset fingerprint
-    Σ xxhash64(title, component) — and the exact old-vs-new label join
-    runs ONLY when consecutive fingerprints match (labels are
-    min-monotone, so multiset equality ⟺ no change; the join guards
-    the astronomically-unlikely sum collision, never the common path).
-    The old per-round changed-count join doubled every round's wide-op
+    Stop test: scale.label_fixpoint — one narrow fingerprint aggregate
+    per round, the exact old-vs-new label join only on a fingerprint
+    match (the cc_star count-first discipline applied to labels).  The
+    old per-round changed-count join doubled every round's wide-op
     count.  At extreme diameters a production system would switch to
     pointer jumping (large/small-star) for O(log d) rounds; hash-min
     keeps the per-round plan identical to the oracle-checked fixed-k
     operator.
 
     ``checkpoint_dir``: reliable per-round checkpoints instead of
-    executor-local blocks (scale.truncate_lineage).
+    executor-local blocks (scale.iterate).
     """
-    from .scale import truncate_lineage
-
     titles, sym = _cc_stage(pages)
-
-    def _fingerprint(lbl: DataFrame) -> int:
-        # decimal(38) sum: n·2^63 overflows a long under ANSI mode
-        return lbl.agg(
-            F.sum(F.xxhash64("title", "component").cast("decimal(38,0)"))
-        ).collect()[0][0]
-
     labels = truncate_lineage(
         titles.select("title", F.col("title").alias("component")),
         checkpoint_dir,
     )
-    fp = _fingerprint(labels)  # doubles as the materializing action
-    done = 0
-    for i in range(max_iterations):
-        new_labels = _cc_round(sym, labels)
-        # labels is referenced twice per round, so the analyzed
-        # plan doubles per round; a LAZY per-round truncation
-        # keeps it flat (its shuffle stages run at the call under
-        # AQE; the fingerprint action right below runs the last
-        # stage) — measured at sf0.1: the loop fell from
-        # ~15.6 s (persist + cadence-5 eager checkpoints; rounds
-        # climbing 0.4 -> 3.5 s from analyzer blowup) to ~6.7 s of
-        # flat ~0.45 s rounds.  Old per-round caches become
-        # unreferenced checkpoint blocks, freed by ContextCleaner.
-        # Reliable when checkpoint_dir is set.
-        new_labels = truncate_lineage(new_labels, checkpoint_dir)
-        new_fp = _fingerprint(new_labels)
-        converged = False
-        if new_fp == fp:
-            # fingerprints agree: confirm exactly (one join, taken at
-            # most once per run on non-adversarial inputs)
-            converged = (
-                new_labels.alias("n")
-                .join(labels.alias("o"), "title")
-                .where(F.col("n.component") != F.col("o.component"))
-                .count()
-                == 0
-            )
-        labels = new_labels
-        fp = new_fp
-        done = i + 1
-        if converged:
-            break
+    labels, done = iterate(
+        labels,
+        partial(_cc_round, sym),
+        rounds=max_iterations,
+        checkpoint_dir=checkpoint_dir,
+        stop=label_fixpoint(labels, "title", "component"),
+    )
     return labels.select("title", "component", F.lit(done).alias("iterations"))
+
+
+def _star_round(edges: DataFrame) -> DataFrame:
+    """ONE large-star + small-star rewrite of the canonical (u < v)
+    edge set (see :func:`connected_components_star`)."""
+    # ---- large-star ----
+    symd = edges.unionAll(
+        edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
+    )
+    m = (
+        symd.groupBy("u")
+        .agg(F.min("v").alias("mn"))
+        .select("u", F.least(F.col("mn"), F.col("u")).alias("m"))
+    )
+    ls = (
+        symd.join(m, "u")
+        .where(F.col("v") > F.col("u"))
+        .select(
+            F.least(F.col("v"), F.col("m")).alias("u"),
+            F.greatest(F.col("v"), F.col("m")).alias("v"),
+        )
+        .where(F.col("u") != F.col("v"))
+        .distinct()
+    )
+    # ---- small-star (group by the larger endpoint) ----
+    s = ls.select(F.col("v").alias("u"), F.col("u").alias("v"))  # v < u now
+    mn = s.groupBy("u").agg(F.min("v").alias("m"))  # m < u always
+    return (
+        s.join(mn, "u")
+        .select(
+            # re-point each smaller neighbor v and u itself at m
+            F.explode(
+                F.array(
+                    F.struct(F.col("v").alias("x"), F.col("m").alias("y")),
+                    F.struct(F.col("u").alias("x"), F.col("m").alias("y")),
+                )
+            ).alias("e")
+        )
+        .select(
+            F.least(F.col("e.x"), F.col("e.y")).alias("u"),
+            F.greatest(F.col("e.x"), F.col("e.y")).alias("v"),
+        )
+        .where(F.col("u") != F.col("v"))
+        .distinct()
+    )
 
 
 def connected_components_star(
     pages: DataFrame,
+    *,
     max_rounds: int = 40,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
@@ -263,11 +264,12 @@ def connected_components_star(
     same oracle — but the round count is ~log n instead of diameter.
 
     Scale notes: each round is two groupBy-min aggregations plus a
-    distinct; edge rows only ever shrink (toward n − 1 star edges); the
-    stop test is one left-anti count per round on the (small) edge
-    relation.  Lineage is truncated with an eager localCheckpoint per
-    round (the edge set is the whole state, so the checkpoint doubles
-    as the stability snapshot; swap for ``checkpoint()`` on a cluster).
+    distinct; edge rows only ever shrink (toward n − 1 star edges).
+    Stop test, cheapest-first: a count mismatch (one scan of the
+    truncated relation) proves change without any join; only when
+    counts match does ONE anti-join run — equal counts plus empty
+    (new \\ old) is a PROOF of set equality.  A non-empty edge set never
+    rewrites to an empty one, so only an edgeless graph skips the loop.
     """
     # canonical undirected pairs (u < v) deduped DIRECTLY via
     # least/greatest — the old undirected_edges(...).where(src < dst)
@@ -275,72 +277,19 @@ def connected_components_star(
     # half of it away; canonicalizing before the distinct halves the
     # dedup's shuffle input for the identical output set (guide §2.3:
     # shuffle fewer bytes).
-    from .scale import truncate_lineage
-
-    # lazy checkpoint: the count right below runs its last stage, so
-    # the eager form's dedicated job is redundant
     edges = truncate_lineage(_canonical_undirected(pages), checkpoint_dir)
     n_edges = edges.count()
-    for _ in range(max_rounds):
-        if n_edges == 0:
-            break
-        # ---- large-star ----
-        symd = edges.unionAll(
-            edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        )
-        m = (
-            symd.groupBy("u")
-            .agg(F.min("v").alias("mn"))
-            .select("u", F.least(F.col("mn"), F.col("u")).alias("m"))
-        )
-        ls = (
-            symd.join(m, "u")
-            .where(F.col("v") > F.col("u"))
-            .select(
-                F.least(F.col("v"), F.col("m")).alias("u"),
-                F.greatest(F.col("v"), F.col("m")).alias("v"),
-            )
-            .where(F.col("u") != F.col("v"))
-            .distinct()
-        )
-        # ---- small-star (group by the larger endpoint) ----
-        s = ls.select(F.col("v").alias("u"), F.col("u").alias("v"))  # v < u now
-        mn = s.groupBy("u").agg(F.min("v").alias("m"))  # m < u always
-        ss = (
-            s.join(mn, "u")
-            .select(
-                # re-point each smaller neighbor v and u itself at m
-                F.explode(
-                    F.array(
-                        F.struct(F.col("v").alias("x"), F.col("m").alias("y")),
-                        F.struct(F.col("u").alias("x"), F.col("m").alias("y")),
-                    )
-                ).alias("e")
-            )
-            .select(
-                F.least(F.col("e.x"), F.col("e.y")).alias("u"),
-                F.greatest(F.col("e.x"), F.col("e.y")).alias("v"),
-            )
-            .where(F.col("u") != F.col("v"))
-            .distinct()
-        )
-        # lazy checkpoint — the stop-test count runs its last stage,
-        # so no dedicated materialization job (the shuffle stages run
-        # at the call under AQE); reliable when checkpoint_dir is set
-        new_edges = truncate_lineage(ss, checkpoint_dir)
-        # stop test, cheapest-first: a count mismatch (one scan of the
-        # checkpointed relation) proves change without any join; only
-        # when counts match does ONE anti-join run — equal counts plus
-        # empty (new \ old) is a PROOF of set equality, so the second
-        # anti-join of the old two-sided test was always redundant.
-        new_n = new_edges.count()
-        stable = (
-            new_n == n_edges
-            and new_edges.join(edges, ["u", "v"], "left_anti").isEmpty()
-        )
-        edges, n_edges = new_edges, new_n
-        if stable:
-            break
+    edges, _ = iterate(
+        edges,
+        _star_round,
+        rounds=max_rounds if n_edges else 0,
+        checkpoint_dir=checkpoint_dir,
+        stop=unchanged(
+            lambda df: df.count(),
+            n_edges,
+            lambda old, new: new.join(old, ["u", "v"], "left_anti").isEmpty(),
+        ),
+    )
     # stars: every remaining edge is (center=u, member=v)
     titles = pages.select("title")
     return (
@@ -450,19 +399,13 @@ def _hits_stage(
     """Shared staging for HITS: (titles, e_src, e_dst, n) — the two
     persisted adjacency copies, one per pull join key, sized at the
     measured width (guide §2.2/§2.4; see the hits() docstring)."""
-    from .scale import adaptive_partitions
-
-    spark = pages.sparkSession
-    pages_c = pages.persist()
-    n = pages_c.count()
-    parts = adaptive_partitions(spark, n)  # measured-size static caches
-    titles = pages_c.select("title").repartition(parts, "title").persist()
-    e_src = valid_edges(pages_c).repartition(parts, "src").persist()
-    e_dst = e_src.repartition(parts, "dst").persist()
-    titles.count()
-    e_src.count()
-    e_dst.count()
-    pages_c.unpersist()
+    with staged(pages) as (p, parts, n):
+        e_src = valid_edges(p).repartition(parts, "src")
+        titles, e_src, e_dst = cache(
+            p.select("title").repartition(parts, "title"),
+            e_src,
+            e_src.repartition(parts, "dst"),
+        )
     return titles, e_src, e_dst, n
 
 
@@ -481,6 +424,15 @@ def _hits_pull(
         .groupBy(F.col(f"e.{src_col}").alias("title"))
         .agg(F.sum("s.score").alias("score"))
     )
+
+
+def _l1(scores: DataFrame) -> DataFrame:
+    """``scores`` L1-normalized by one driver norm scalar (unchanged
+    when the total is 0)."""
+    tot = scores.agg(F.sum("score")).first()[0]
+    if not tot or tot <= 0.0:
+        return scores
+    return scores.select("title", (F.col("score") / F.lit(tot)).alias("score"))
 
 
 def hits(
@@ -522,9 +474,11 @@ def hits(
     ``checkpoint_every`` cadence knob is gone: per-iteration lazy
     truncation replaced the cadence entirely, so the parameter had
     become silently dead — callers tuning it got no behavior.)
-    """
-    from .scale import truncate_lineage
 
+    The loop is not scale.iterate's ``state → step(state)`` shape: the
+    norm scalar rescales the TRUNCATED pull, and the final hub is the
+    last iteration's intermediate pull, not its state.
+    """
     # The hub pull joins scores on e.dst, the authority pull on e.src.
     # One cached copy keyed on src (the pre-r11 shape) forced the hub
     # pull to re-shuffle the FULL edge relation by dst every iteration
@@ -537,40 +491,16 @@ def hits(
 
     auth = titles.select("title", F.lit(1.0 / n).alias("score"))
     hub_un = auth
-
-    def _pull(scores: DataFrame, src_col: str, dst_col: str) -> DataFrame:
-        e = e_dst if dst_col == "dst" else e_src
-        return _hits_pull(e, scores, src_col, dst_col)
-
-    for i in range(iterations):
-        hub_un = _pull(auth, "src", "dst")  # hub(v) = Σ_{v→u} auth(u)
-        # lazy per-iteration checkpoint: truncates the growing
-        # auth->hub->auth lineage every round with no dedicated
-        # materialization job — the norm action right below runs its
-        # last stage, its shuffle stages run at the call under AQE
-        # (scale.truncate_lineage; the old persist + cadence-5
-        # eager checkpoints left the analyzed plan growing between
-        # checkpoints — see connected_components)
-        auth_un = truncate_lineage(
-            _pull(hub_un, "dst", "src"), checkpoint_dir
-        )  # Σ_{v→u} hub(v)
-        tot = auth_un.agg(F.sum("score")).first()[0]
-        auth = (
-            auth_un
-            if not tot or tot <= 0.0
-            else auth_un.select(
-                "title", (F.col("score") / F.lit(tot)).alias("score")
-            )
+    for _ in range(iterations):
+        hub_un = _hits_pull(e_dst, auth, "src", "dst")  # Σ_{v→u} auth(u)
+        # per-iteration truncation, for the reason scale.iterate gives;
+        # the norm action in _l1 runs its last stage
+        auth = _l1(
+            truncate_lineage(
+                _hits_pull(e_src, hub_un, "dst", "src"), checkpoint_dir
+            )  # Σ_{v→u} hub(v)
         )
-    hub_un = hub_un.persist()
-    hub_tot = hub_un.agg(F.sum("score")).first()[0]
-    hub = (
-        hub_un
-        if not hub_tot or hub_tot <= 0.0
-        else hub_un.select(
-            "title", (F.col("score") / F.lit(hub_tot)).alias("score")
-        )
-    )
+    hub = _l1(hub_un.persist())
     out = (
         titles.alias("t")
         .join(hub.select("title", F.col("score").alias("hub")), "title", "left")
@@ -591,9 +521,52 @@ def hits(
 BFS_ITERATIONS = 8
 
 
+def _relax_round(e: DataFrame, hop: Column, d: DataFrame) -> DataFrame:
+    """ONE min-plus round over the state ``d`` = (carried keys..., title,
+    value): every row relaxes across the cached adjacency (alias ``e``)
+    to (..., e.dst, ``hop``), and the union with ``d`` min-merges per
+    key.  ``hop`` is a column over aliases ``d``/``e`` (``d.depth + 1``,
+    ``d.dist + e.w``).  Also called by tools/dump_round_plans.py."""
+    *keys, value = d.columns
+    expanded = (
+        e.alias("e")
+        .join(d.alias("d"), F.col("e.src") == F.col("d.title"))
+        .select(
+            *[F.col(f"d.{k}").alias(k) for k in keys if k != "title"],
+            F.col("e.dst").alias("title"),
+            hop.alias(value),
+        )
+    )
+    return d.unionAll(expanded).groupBy(*keys).agg(F.min(value).alias(value))
+
+
+def _relax(pages, sources, seed, hop, iterations, checkpoint_dir, w=None):
+    """The min-plus loop of :func:`bfs_depths`, :func:`sssp_dists` and
+    :func:`bfs_depths_labeled`: the ``seed`` columns over the source
+    titles start the state, which relaxes for ``iterations`` rounds
+    through the valid-edge cache (with edge weight ``w`` when given).
+
+    The state is eagerly truncated BEFORE the page cache is released:
+    the seed leaf scans pages (a corpus re-parse once uncached).  The
+    edge cache stays persisted DELIBERATELY: the cache manager dedups by
+    logical plan, so every BFS op in the session (bfs_depths_frontier
+    too) reuses one cached adjacency instead of rebuilding it per call —
+    bounded at one edge relation per corpus."""
+    with staged(pages) as (p, parts, _):
+        e = valid_edges(p)
+        if w is not None:
+            e = e.select("src", "dst", w.alias("w"))
+        (e,) = cache(e.repartition(parts, "src"))
+        d = p.select("title").where(F.col("title").isin(*sources)).select(*seed)
+        step = partial(_relax_round, e, hop)
+        d = iterate(d, step, rounds=iterations, checkpoint_dir=checkpoint_dir)[0]
+        return truncate_lineage(d, checkpoint_dir, eager=True)
+
+
 def bfs_depths(
     pages: DataFrame,
     sources: list[str],
+    *,
     iterations: int = BFS_ITERATIONS,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
@@ -618,52 +591,17 @@ def bfs_depths(
     """
     if not sources:
         raise ValueError("bfs_depths needs a non-empty source set")
-    from .scale import adaptive_partitions, truncate_lineage
-
-    spark = pages.sparkSession
-    pages_c = pages.persist()
-    parts = adaptive_partitions(spark, pages_c.count())
-    e = valid_edges(pages_c).repartition(parts, "src").persist()
-    seeds = (
-        pages_c.select("title")
-        .where(F.col("title").isin(*sources))
-        .select("title", F.lit(0).cast("long").alias("depth"))
+    depth = F.lit(0).cast("long").alias("depth")
+    return _relax(
+        pages, sources, ["title", depth], F.col("d.depth") + 1, iterations,
+        checkpoint_dir,
     )
-    e.count()
-    depths = seeds
-    for i in range(iterations):
-        expanded = (
-            e.alias("e")
-            .join(depths.alias("d"), F.col("e.src") == F.col("d.title"))
-            .select(
-                F.col("e.dst").alias("title"),
-                (F.col("d.depth") + 1).alias("depth"),
-            )
-        )
-        depths = (
-            depths.unionAll(expanded)
-            .groupBy("title")
-            .agg(F.min("depth").alias("depth"))
-        )
-        # depths referenced twice per round (expand + union):
-        # lazy per-round truncation keeps the analyzed plan flat
-        # instead of doubling (see connected_components); reliable
-        # when checkpoint_dir is set
-        depths = truncate_lineage(depths, checkpoint_dir)
-    # materialize before releasing the page cache: the lazy plan's
-    # seed leaf scans pages (a corpus re-parse once uncached).  The
-    # edge relation stays persisted DELIBERATELY: the cache manager
-    # dedups by logical plan, so repeated graph queries in one session
-    # reuse one cached adjacency instead of rebuilding it per call —
-    # bounded at one edge relation per corpus.
-    depths = truncate_lineage(depths, checkpoint_dir, eager=True)
-    pages_c.unpersist()
-    return depths
 
 
 def bfs_depths_frontier(
     pages: DataFrame,
     sources: list[str],
+    *,
     max_iterations: int = 64,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
@@ -687,18 +625,15 @@ def bfs_depths_frontier(
     """
     if not sources:
         raise ValueError("bfs_depths_frontier needs a non-empty source set")
-    from .scale import adaptive_partitions, truncate_lineage
-
-    spark = pages.sparkSession
-    pages_c = pages.persist()
-    parts = adaptive_partitions(spark, pages_c.count())
-    e = valid_edges(pages_c).repartition(parts, "src").persist()
-    e.count()
-    frontier = (
-        pages_c.select("title")
-        .where(F.col("title").isin(*sources))
-        .select("title", F.lit(0).cast("long").alias("depth"))
-    )
+    with staged(pages) as (p, parts, _):
+        (e,) = cache(valid_edges(p).repartition(parts, "src"))
+        frontier = truncate_lineage(
+            p.select("title")
+            .where(F.col("title").isin(*sources))
+            .select("title", F.lit(0).cast("long").alias("depth")),
+            checkpoint_dir,
+            eager=True,
+        )
     # settled = union of per-depth frontier parts, each part an
     # eagerly-localCheckpoint'd O(1)-plan leaf.  Checkpointing the
     # FRONTIER (small, shrinking) instead of the whole settled union
@@ -711,9 +646,9 @@ def bfs_depths_frontier(
     # (a 2 GB plan string + analyzer OOM by round 8 at sf0.1 — same
     # hazard the g11 k-core notes document).  With it, round d's plan
     # is a join against one leaf plus an anti-join against d leaves:
-    # linear, bounded.
-    frontier = truncate_lineage(frontier, checkpoint_dir, eager=True)
-    parts = [frontier]
+    # linear, bounded.  The loop is not scale.iterate's shape: the
+    # round number is a column, the settled union grows beside the
+    # state, and an empty frontier is not part of the result.
     settled = frontier
     depth = 0
     while depth < max_iterations:
@@ -729,10 +664,8 @@ def bfs_depths_frontier(
         nxt = truncate_lineage(nxt, checkpoint_dir, eager=True)
         if nxt.count() == 0:  # S5 stop rule: frontier exhausted
             break
-        parts.append(nxt)
         settled = settled.unionAll(nxt)
         frontier = nxt
-    pages_c.unpersist()
     # deliberately NOT e.unpersist(): valid_edges is the plan-deduped
     # adjacency cache shared with bfs_depths / bfs_depths_labeled /
     # sssp_dists in the same session — evicting it here would silently
@@ -746,8 +679,57 @@ KCORE_K = 2
 KCORE_ROUNDS = 6
 
 
+def _peel(pages, k, rounds, checkpoint_dir, until):
+    """The k-core peel loop of :func:`kcore_survivors` (a fixed budget
+    of ``rounds``) and :func:`kcore_until` (``until``: stop at the
+    first round without removals, up to ``rounds``).
+
+    Per round: two semi-joins restrict the survivor edge relation to
+    survivors on both endpoints, and one degree aggregate + filter
+    yields the next survivors.  The restricted edge relation is eagerly
+    truncated and REPLACES the edge relation: it is referenced by both
+    next round's semi-joins AND the degree aggregate, and it strictly
+    shrinks — on power-law graphs most peeling happens up front, so
+    later rounds scan a fraction of the original edges."""
+    with staged(pages) as (p, parts, _):
+        (sym,) = cache(undirected_edges(p, key="src", num_partitions=parts))
+    alive = [sym]
+
+    def peel(nodes: DataFrame) -> DataFrame:
+        e = truncate_lineage(
+            alive[0]
+            .join(nodes.select(F.col("title").alias("src")), "src", "left_semi")
+            .join(nodes.select(F.col("title").alias("dst")), "dst", "left_semi"),
+            checkpoint_dir,
+            eager=True,
+        )
+        # the staged cache after round 1; a no-op on checkpoint frames
+        alive[0].unpersist()
+        alive[0] = e
+        return (
+            e.groupBy("src")
+            .agg(F.count("*").alias("deg"))
+            .where(F.col("deg") >= k)
+            .select(F.col("src").alias("title"))
+        )
+
+    nodes = sym.select(F.col("src").alias("title")).distinct()
+    stop = None
+    if until:
+        # survivor counts strictly decrease until the fixpoint, so one
+        # driver count per round doubles as the stop test
+        nodes = nodes.persist()
+        stop = unchanged(lambda df: df.count(), nodes.count())
+    out, _ = iterate(
+        nodes, peel, rounds=rounds, checkpoint_dir=checkpoint_dir, stop=stop
+    )
+    nodes.unpersist()
+    return out
+
+
 def kcore_survivors(
     pages: DataFrame,
+    *,
     k: int = KCORE_K,
     rounds: int = KCORE_ROUNDS,
     checkpoint_dir: str | None = None,
@@ -757,50 +739,9 @@ def kcore_survivors(
     among CURRENT survivors is < k.  After enough rounds this is the
     k-core (the maximal subgraph of min-degree >= k); fixed ``rounds``
     keeps the op deterministic and the oracle unrollable (the peeling
-    sequence is integer-only: no float risk anywhere).
-
-    Per round: one semi-join to restrict the cached symmetric edge
-    relation to survivors on both endpoints + one degree aggregate +
-    one filter — the degree recomputation touches only edges between
-    survivors, which strictly shrinks.  Data-dependent full peeling
-    (loop until no removal) would be the ``_until`` variant, same
-    driver-loop pattern as ``connected_components_until``.
-    """
-    from .scale import adaptive_partitions, truncate_lineage
-
-    spark = pages.sparkSession
-    pages_c = pages.persist()
-    parts = adaptive_partitions(spark, pages_c.count())
-    sym = undirected_edges(pages_c, key="src", num_partitions=parts).persist()
-    sym.count()
-    pages_c.unpersist()
-    nodes = sym.select(F.col("src").alias("title")).distinct()
-    for i in range(rounds):
-        alive_a = nodes.select(F.col("title").alias("src"))
-        alive_b = nodes.select(F.col("title").alias("dst"))
-        # materialize the strictly-shrinking survivor edge relation
-        # each round (eager checkpoint): keeps the otherwise
-        # 2-joins-per-round unrolled lineage flat AND makes later
-        # rounds scan only surviving edges — on power-law graphs most
-        # peeling happens up front, so this is a fraction of the
-        # original relation almost immediately
-        alive_edges = truncate_lineage(
-            sym.join(alive_a, "src", "left_semi").join(
-                alive_b, "dst", "left_semi"
-            ),
-            checkpoint_dir,
-            eager=True,
-        )
-        if i == 0:
-            sym.unpersist()  # later syms are checkpoint blocks
-        sym = alive_edges
-        nodes = (
-            alive_edges.groupBy("src")
-            .agg(F.count("*").alias("deg"))
-            .where(F.col("deg") >= k)
-            .select(F.col("src").alias("title"))
-        )
-    return nodes
+    sequence is integer-only: no float risk anywhere).  Per-round shape:
+    :func:`_peel`."""
+    return _peel(pages, k, rounds, checkpoint_dir, until=False)
 
 
 KCORE_MAX_ROUNDS = 50  # convergence-loop safety cap
@@ -808,6 +749,7 @@ KCORE_MAX_ROUNDS = 50  # convergence-loop safety cap
 
 def kcore_until(
     pages: DataFrame,
+    *,
     k: int = KCORE_K,
     max_rounds: int = KCORE_MAX_ROUNDS,
     checkpoint_dir: str | None = None,
@@ -815,64 +757,10 @@ def kcore_until(
     """(title,): the TRUE k-core — peel to the fixpoint with a
     zero-removals stop rule instead of :func:`kcore_survivors`' fixed
     budget (the same fixed→converged upgrade as
-    ``connected_components_until``).  Survivor counts are strictly
-    decreasing until the fixpoint, so one driver count per round (the
-    S5 scalar channel) doubles as the stop test; peeling is idempotent
-    past the fixpoint, which is what lets the oracle use a fixed
-    upper-bound unroll."""
-    from .scale import adaptive_partitions, truncate_lineage
-
-    spark = pages.sparkSession
-    pages_c = pages.persist()
-    parts = adaptive_partitions(spark, pages_c.count())
-    sym = undirected_edges(pages_c, key="src", num_partitions=parts).persist()
-    sym.count()
-    pages_c.unpersist()
-    nodes = sym.select(F.col("src").alias("title")).distinct().persist()
-    n_prev = nodes.count()
-    for i in range(max_rounds):
-        alive_a = nodes.select(F.col("title").alias("src"))
-        alive_b = nodes.select(F.col("title").alias("dst"))
-        # the SURVIVOR edge relation replaces sym each round (eager
-        # checkpoint: it is referenced by both next round's semi-joins
-        # AND the degree agg, and it strictly shrinks — on power-law
-        # graphs most peeling happens in the first rounds, so later
-        # rounds scan a fraction of the original edges instead of
-        # re-filtering the full relation every time)
-        alive_edges = truncate_lineage(
-            sym.join(alive_a, "src", "left_semi").join(
-                alive_b, "dst", "left_semi"
-            ),
-            checkpoint_dir,
-            eager=True,
-        )
-        if i == 0:
-            sym.unpersist()  # the original persisted relation; later
-            # rounds' syms are checkpoint blocks (ContextCleaner frees
-            # them on reference drop — unpersist() is a no-op there)
-        sym = alive_edges
-        # nodes appears TWICE per round (both endpoints), so lineage
-        # would double per round — an eager checkpoint EVERY round
-        # keeps the plan flat (unlike cc_until's single-reference
-        # recurrence, where a cadence of 5 suffices).
-        nxt = (
-            alive_edges.groupBy("src")
-            .agg(F.count("*").alias("deg"))
-            .where(F.col("deg") >= k)
-            .select(F.col("src").alias("title"))
-        )
-        # lazy: the stop-rule count right below runs its last stage,
-        # so no dedicated materialization job (the shuffle stages run
-        # at the call under AQE); reliable when checkpoint_dir is set
-        nxt = truncate_lineage(nxt, checkpoint_dir)
-        n_now = nxt.count()
-        nodes.unpersist()
-        nodes = nxt
-        if n_now == n_prev:  # zero removals: fixpoint reached
-            break
-        n_prev = n_now
-    sym.unpersist()
-    return nodes
+    ``connected_components_until``).  Peeling is idempotent past the
+    fixpoint, which is what lets the oracle use a fixed upper-bound
+    unroll."""
+    return _peel(pages, k, max_rounds, checkpoint_dir, until=True)
 
 
 def kcore_sql(pages_ctes: str, sym_cte: str, k: int = KCORE_K,
@@ -897,8 +785,35 @@ SELECT title FROM n{rounds}"""
 LPA_ROUNDS = 5
 
 
+def _lpa_round(sym: DataFrame, labels: DataFrame) -> DataFrame:
+    """ONE synchronous plurality round: labels pulled across the cached
+    symmetric adjacency, counted per (node, label), argmax by
+    MIN(struct(-count, label)), merged into the current labels."""
+    best = (
+        sym.alias("e")
+        .join(labels.alias("l"), F.col("e.dst") == F.col("l.title"))
+        .groupBy(F.col("e.src").alias("title"), F.col("l.label"))
+        .agg(F.count("*").alias("c"))
+        .groupBy("title")
+        .agg(
+            F.min(
+                F.struct((-F.col("c")).alias("nc"), F.col("label"))
+            )["label"].alias("new_label")
+        )
+    )
+    return (
+        labels.alias("l")
+        .join(best.alias("b"), "title", "left")
+        .select(
+            "title",
+            F.coalesce(F.col("b.new_label"), F.col("l.label")).alias("label"),
+        )
+    )
+
+
 def label_propagation(
     pages: DataFrame,
+    *,
     rounds: int = LPA_ROUNDS,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
@@ -919,46 +834,10 @@ def label_propagation(
     label) = MIN over struct(-count, label)) + the singleton left
     join.  The adjacency never re-shuffles; only labels move.
     """
-    from .scale import adaptive_partitions, truncate_lineage
-
-    spark = pages.sparkSession
-    pages_c = pages.persist()
-    parts = adaptive_partitions(spark, pages_c.count())
-    titles = pages_c.select("title").repartition(parts, "title").persist()
-    sym = undirected_edges(pages_c, key="dst", num_partitions=parts).persist()
-    titles.count()
-    sym.count()
-    pages_c.unpersist()
-
+    titles, sym = _cc_stage(pages, key="dst")
     labels = titles.select("title", F.col("title").alias("label"))
-    for i in range(rounds):
-        best = (
-            sym.alias("e")
-            .join(labels.alias("l"), F.col("e.dst") == F.col("l.title"))
-            .groupBy(F.col("e.src").alias("title"), F.col("l.label"))
-            .agg(F.count("*").alias("c"))
-            .groupBy("title")
-            .agg(
-                F.min(
-                    F.struct((-F.col("c")).alias("nc"), F.col("label"))
-                )["label"].alias("new_label")
-            )
-        )
-        labels = (
-            labels.alias("l")
-            .join(best.alias("b"), "title", "left")
-            .select(
-                "title",
-                F.coalesce(F.col("b.new_label"), F.col("l.label")).alias(
-                    "label"
-                ),
-            )
-        )
-        # labels referenced twice per round (plurality pull + the
-        # merge): lazy per-round truncation keeps the analyzed plan
-        # flat instead of doubling (see connected_components);
-        # reliable when checkpoint_dir is set
-        labels = truncate_lineage(labels, checkpoint_dir)
+    step = partial(_lpa_round, sym)
+    labels = iterate(labels, step, rounds=rounds, checkpoint_dir=checkpoint_dir)[0]
     return labels.select("title", F.col("label").alias("community"))
 
 
@@ -1012,6 +891,7 @@ def edge_weight(dst) -> F.Column:
 def sssp_dists(
     pages: DataFrame,
     sources: list[str],
+    *,
     iterations: int = SSSP_ITERATIONS,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
@@ -1026,52 +906,17 @@ def sssp_dists(
     """
     if not sources:
         raise ValueError("sssp_dists needs a non-empty source set")
-    from .scale import adaptive_partitions, truncate_lineage
-
-    spark = pages.sparkSession
-    pages_c = pages.persist()
-    parts = adaptive_partitions(spark, pages_c.count())
-    e = (
-        valid_edges(pages_c)
-        .select("src", "dst", edge_weight(F.col("dst")).alias("w"))
-        .repartition(parts, "src")
-        .persist()
+    dist = F.lit(0).cast("long").alias("dist")
+    return _relax(
+        pages, sources, ["title", dist], F.col("d.dist") + F.col("e.w"),
+        iterations, checkpoint_dir, w=edge_weight(F.col("dst")),
     )
-    seeds = (
-        pages_c.select("title")
-        .where(F.col("title").isin(*sources))
-        .select("title", F.lit(0).cast("long").alias("dist"))
-    )
-    e.count()
-    dists = seeds
-    for i in range(iterations):
-        relaxed = (
-            e.alias("e")
-            .join(dists.alias("d"), F.col("e.src") == F.col("d.title"))
-            .select(
-                F.col("e.dst").alias("title"),
-                (F.col("d.dist") + F.col("e.w")).alias("dist"),
-            )
-        )
-        dists = (
-            dists.unionAll(relaxed)
-            .groupBy("title")
-            .agg(F.min("dist").alias("dist"))
-        )
-        # dists referenced twice per round: lazy per-round truncation
-        # keeps the plan flat (see connected_components); reliable
-        # when checkpoint_dir is set
-        dists = truncate_lineage(dists, checkpoint_dir)
-    # same as bfs_depths: materialize, release the page cache, keep
-    # the (plan-deduped) adjacency cache for cross-query reuse
-    dists = truncate_lineage(dists, checkpoint_dir, eager=True)
-    pages_c.unpersist()
-    return dists
 
 
 def bfs_depths_labeled(
     pages: DataFrame,
     sources: list[str],
+    *,
     iterations: int = 8,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
@@ -1089,56 +934,17 @@ def bfs_depths_labeled(
     depths to those k (Potamias et al.'s landmark method)."""
     if not sources:
         raise ValueError("bfs_depths_labeled needs a non-empty source set")
-    from .scale import adaptive_partitions, truncate_lineage
-
-    spark = pages.sparkSession
-    pages_c = pages.persist()
-    parts = adaptive_partitions(spark, pages_c.count())
-    e = valid_edges(pages_c).repartition(parts, "src").persist()
-    e.count()
-    depths = (
-        pages_c.select("title")
-        .where(F.col("title").isin(*sources))
-        .select(
-            F.col("title").alias("seed"),
-            "title",
-            F.lit(0).cast("long").alias("depth"),
-        )
+    depth = F.lit(0).cast("long").alias("depth")
+    return _relax(
+        pages, sources, [F.col("title").alias("seed"), "title", depth],
+        F.col("d.depth") + 1, iterations, checkpoint_dir,
     )
-    for i in range(iterations):
-        expanded = (
-            e.alias("e")
-            .join(depths.alias("d"), F.col("e.src") == F.col("d.title"))
-            .select(
-                F.col("d.seed").alias("seed"),
-                F.col("e.dst").alias("title"),
-                (F.col("d.depth") + 1).alias("depth"),
-            )
-        )
-        depths = (
-            depths.unionAll(expanded)
-            .groupBy("seed", "title")
-            .agg(F.min("depth").alias("depth"))
-        )
-        # depths referenced twice per round: lazy per-round truncation
-        # keeps the plan flat (see connected_components); reliable
-        # when checkpoint_dir is set
-        depths = truncate_lineage(depths, checkpoint_dir)
-    # materialize BEFORE releasing the page cache: the lazy plan
-    # references e once per un-checkpointed round, and an unpersisted e
-    # re-parses the corpus on every reference (measured 15.5s -> 5.2s
-    # warm at sf0.1).  e itself stays persisted deliberately — its plan
-    # is identical to the other BFS ops' valid_edges, so the cache
-    # manager shares ONE cached adjacency across every graph query in
-    # the session (unpersisting here would evict it under them).
-    depths = truncate_lineage(depths, checkpoint_dir, eager=True)
-    pages_c.unpersist()
-    return depths
 
 
 def landmark_closeness(
     pages: DataFrame,
     sources: list[str],
+    *,
     iterations: int = 8,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
@@ -1152,7 +958,7 @@ def landmark_closeness(
     row exists.  The division is one small-int-over-int-sum IEEE op,
     identical cross-engine."""
     d = bfs_depths_labeled(
-        pages, sources, iterations, checkpoint_dir=checkpoint_dir
+        pages, sources, iterations=iterations, checkpoint_dir=checkpoint_dir
     )
     return (
         d.where(F.col("depth") > 0)
@@ -1191,6 +997,7 @@ COCITE_MAX_INDEG = 32
 
 def cocitation_edges(
     pages: DataFrame,
+    *,
     max_indeg: int = COCITE_MAX_INDEG,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
@@ -1202,8 +1009,6 @@ def cocitation_edges(
     instead of 10^12.  The raw link graph is triangle-free by
     construction on the synthetic corpus; co-citation cliques are
     where triangle structure actually lives."""
-    from .scale import adaptive_partitions, truncate_lineage
-
     # Stage the corpus parse ONCE (the indeg agg and both sides of the
     # pair self-join would otherwise each re-parse the corpus), and
     # hash-partition the staged edge cache on DST at the MEASURED
@@ -1214,17 +1019,8 @@ def cocitation_edges(
     # the width is n/16k rows rather than the conf constant that made
     # 32 cores a net loss on this family (r11 scaling block: g13/g14/
     # g17 at sec@8/sec@32 = 0.44-0.59).
-    spark = pages.sparkSession
-    pages_c = pages.persist()
-    parts = adaptive_partitions(spark, pages_c.count())
-    e = (
-        edges(pages_c)
-        .select("src", "dst")
-        .repartition(parts, "dst")
-        .persist()
-    )
-    e.count()
-    pages_c.unpersist()
+    with staged(pages) as (p, parts, _):
+        (e,) = cache(edges(p).select("src", "dst").repartition(parts, "dst"))
     ind = e.groupBy("dst").agg(F.count("*").alias("indeg"))
     capped = e.join(
         ind.where(F.col("indeg") <= max_indeg).select("dst"), "dst"
@@ -1322,6 +1118,7 @@ def _truss_round(
 
 def truss_edges(
     edges_ab: DataFrame,
+    *,
     k: int = TRUSS_K,
     rounds: int = TRUSS_ROUNDS,
     checkpoint_dir: str | None = None,
@@ -1338,31 +1135,30 @@ def truss_edges(
     formulation, algorithm-independent truth), each triangle credits
     its three canonical edges, and edges below k-2 support are peeled.
     """
-    from .scale import adaptive_partitions, truncate_lineage
-
-    spark = edges_ab.sparkSession
-    e = edges_ab.select("a", "b").persist()
     # measured-size width for the per-round caches (guide §2.2): the
     # wedge self-join reads `oriented` keyed on its own join key, so
     # partitioning the persisted copy by u at n/16k width makes the
     # heaviest join of every round exchange-free AND stops the round
     # stages paying conf-width scheduling on a few-thousand-row
     # relation (r11 scaling block: g13 ran 2x FASTER on 8 cores)
-    parts = adaptive_partitions(spark, e.count())
-    out = None
-    for _ in range(rounds):
-        nxt, oriented = _truss_round(e, k, parts)
-        # eager truncation instead of persist+count: same one
-        # materialization job per round, but the next round's plan
-        # starts from a flat leaf — e is referenced THREE times per
-        # round (sym's two union branches + the peel join), so an
-        # un-truncated plan triples per round.  Reliable when
-        # checkpoint_dir is set.
-        nxt = truncate_lineage(nxt, checkpoint_dir, eager=True)
-        e.unpersist()
-        oriented.unpersist()
-        e = nxt
-        out = nxt
+    held: list[DataFrame] = []
+
+    def peel(e: DataFrame) -> DataFrame:
+        # the previous round's oriented cache: its peel is materialized
+        for df in held:
+            df.unpersist()
+        peeled, oriented = _truss_round(e, k, parts)
+        held[:] = [oriented]
+        return peeled
+
+    with staged(edges_ab.select("a", "b")) as (e, parts, _):
+        # eager: one materialization job per round, as persist+count
+        # would pay, and the round's oriented cache can go
+        out, _ = iterate(
+            e, peel, rounds=rounds, checkpoint_dir=checkpoint_dir, eager=True
+        )
+    for df in held:
+        df.unpersist()
     return out.select("a", "b", "support")
 
 
@@ -1441,8 +1237,6 @@ def adamic_adar(
     """(a, b, n_common, aa_e9) for UNLINKED undirected pairs a < b
     with >= ``min_common`` shared neighbors of degree in
     [2, ``max_deg``]; aa_e9 = Σ_z floor(1e9/ln(deg z) + 0.5000001)."""
-    from .scale import adaptive_partitions, truncate_lineage
-
     # Stage the symmetric relation keyed on SRC at the measured width
     # (guide §2.2/§2.4 — the cc/LPA C1+C2 discipline): the degree
     # aggregate, the term attach, and the z-keyed pair self-join are
@@ -1451,12 +1245,9 @@ def adamic_adar(
     # (a, b) aggregate + anti join.  Before, this operator ran at the
     # conf width on a few-thousand-row relation (r11 scaling block:
     # g14 sec@8/sec@32 = 0.59 — 32 cores were a net loss).
-    spark = pages.sparkSession
-    pages_c = pages.persist()
-    parts = adaptive_partitions(spark, pages_c.count())
-    und = undirected_edges(pages_c, key="src", num_partitions=parts).persist()
-    und.count()  # stage once: degrees, both join sides, the anti join
-    pages_c.unpersist()
+    with staged(pages) as (p, parts, _):
+        # stage once: degrees, both join sides, the anti join
+        (und,) = cache(undirected_edges(p, key="src", num_partitions=parts))
     deg = und.groupBy("src").agg(F.count("*").alias("deg"))
     term = deg.where(
         (F.col("deg") >= 2) & (F.col("deg") <= max_deg)
@@ -1557,7 +1348,9 @@ def local_clustering(
     """(title, deg, n_tri, lcc_e6) for co-citation nodes with deg >= 2
     (deg < 2 has no defined coefficient)."""
     # canonical a<b, pinned
-    e = cocitation_edges(pages, max_indeg, checkpoint_dir)
+    e = cocitation_edges(
+        pages, max_indeg=max_indeg, checkpoint_dir=checkpoint_dir
+    )
     both = e.select(F.col("a").alias("t")).unionAll(
         e.select(F.col("b").alias("t"))
     )
@@ -1751,7 +1544,9 @@ def local_bridges(
     either side is a pendant, not a community connector — callers
     filter on the degrees)."""
     # canonical a<b, pinned
-    e = cocitation_edges(pages, max_indeg, checkpoint_dir)
+    e = cocitation_edges(
+        pages, max_indeg=max_indeg, checkpoint_dir=checkpoint_dir
+    )
     tri = (
         e.alias("e1")
         .join(e.alias("e2"), F.col("e2.a") == F.col("e1.b"))

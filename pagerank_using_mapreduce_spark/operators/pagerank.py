@@ -26,11 +26,13 @@ Semantics preserved exactly (SURVEY.md §7.4):
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.textops import extract_links, extract_text_full, extract_title
-from .scale import adaptive_partitions, truncate_lineage
+from .scale import cache, iterate, staged, truncate_lineage
 
 DAMPING = 0.85
 ITERATIONS = 10
@@ -91,33 +93,21 @@ def edges(pages: DataFrame) -> DataFrame:
 
 
 def _stage(pages, n=None, mark_seeds=None, weigh=None):
-    """Stage the static relations once → (titles, e, n).
-
-    ``pages`` is persisted while both relations are built from it (one
-    corpus parse, not one per relation), then released.  ``titles``
-    (hash-partitioned on title) and ``e`` (:func:`edges`, on src) are
-    persisted: a cached relation keeps its output partitioning, so each
-    round shuffles only the small (title, rank) relation, never the
-    adjacency.  Width: the MEASURED page count capped by the configured
-    shuffle width (scale.adaptive_partitions).  ``mark_seeds`` maps the
-    title relation before partitioning (the is_seed flag); ``weigh``
-    maps the partitioned edges (a co-partitioned per-source total — built
-    before the repartition it would add an Exchange)."""
-    pages_c = pages.persist()
-    if n is None:
-        n = pages_c.count()  # A1: pages rows ARE the distinct titles
-    parts = adaptive_partitions(pages.sparkSession, n)
-    titles = pages_c.select("title")
-    if mark_seeds is not None:
-        titles = mark_seeds(titles)
-    titles = titles.repartition(parts, "title").persist()
-    e = edges(pages_c).repartition(parts, "src")
-    if weigh is not None:
-        e = weigh(e)
-    e = e.persist()
-    titles.count()
-    e.count()  # materialize the adjacency once (reference job ②)
-    pages_c.unpersist()
+    """Stage the static relations once (scale.staged) → (titles, e, n):
+    ``titles`` hash-partitioned on title and ``e`` (:func:`edges`) on
+    src, both persisted, so each round shuffles only the small
+    (title, rank) relation, never the adjacency.  ``mark_seeds`` maps
+    the title relation before partitioning (the is_seed flag);
+    ``weigh`` maps the partitioned edges (a co-partitioned per-source
+    total — built before the repartition it would add an Exchange)."""
+    with staged(pages, n) as (p, parts, n):
+        titles = p.select("title")
+        if mark_seeds is not None:
+            titles = mark_seeds(titles)
+        e = edges(p).repartition(parts, "src")
+        if weigh is not None:
+            e = weigh(e)
+        titles, e = cache(titles.repartition(parts, "title"), e)
     return titles, e, n
 
 
@@ -128,7 +118,7 @@ def _empty(titles: DataFrame, *extra) -> DataFrame:
     return titles.select("title", rank, *extra).where(F.lit(False))
 
 
-def _rank_round(titles, e, ranks, contrib, teleport, damping) -> DataFrame:
+def _rank_round(titles, e, contrib, teleport, damping, ranks) -> DataFrame:
     """One round, ``join → partial+final sum → left join``: ``contrib``
     (over aliases ``e``/``r``) is summed per target with map-side
     partials; the left join FROM ``titles`` (alias ``t``) is the
@@ -154,33 +144,6 @@ def _rank_round(titles, e, ranks, contrib, teleport, damping) -> DataFrame:
     )
 
 
-def _iterate(
-    titles, e, ranks, contrib, teleport, damping, rounds, checkpoint_dir, tol=None
-):
-    """Run up to ``rounds`` rounds → (ranks, rounds_run).  Each round's
-    ranks go through scale.truncate_lineage, so the plan stays one round
-    deep.  ``tol`` adds :func:`pagerank_until`'s stop rule: one driver
-    scalar per round, max |Δrank| over the old/new join."""
-    done = 0
-    for done in range(1, rounds + 1):
-        new = truncate_lineage(
-            _rank_round(titles, e, ranks, contrib, teleport, damping),
-            checkpoint_dir,
-        )
-        converged = (
-            tol is not None
-            and new.alias("n")
-            .join(ranks.alias("o"), "title")
-            .agg(F.max(F.abs(F.col("n.rank") - F.col("o.rank"))).alias("d"))
-            .first()["d"]
-            < tol
-        )
-        ranks = new
-        if converged:
-            break
-    return ranks, done
-
-
 def pagerank(
     pages: DataFrame,
     *,
@@ -196,15 +159,16 @@ def pagerank(
     - the static relations (titles, edges) are hash-partitioned on the
       join key once and persisted (:func:`_stage`), so per-iteration
       joins only shuffle the small (title, rank) relation;
-    - lineage is truncated every round (scale.truncate_lineage): a lazy
+    - lineage is truncated every round (scale.iterate): a lazy
       ``localCheckpoint`` by default, so the plan depth stays O(1) and
       no round pays a dedicated materialization job.  Lazy is not
       deferred: under AQE the truncation runs each round's shuffle
       stages when it is called (at sf0.1 on ``local[4]``: 50 jobs
       while this function runs, 2 on the ``count()`` after it).  With
-      ``checkpoint_dir`` set each round is a RELIABLE checkpoint
-      (restart durability on a cluster), which computes the round a
-      second time when it writes the checkpoint;
+      ``checkpoint_dir`` set each round is written as a RELIABLE
+      checkpoint (restart durability on a cluster), which computes the
+      round a second time, and the superseded round's files are
+      deleted;
     - ``init_ranks`` (a (title, rank) DataFrame) WARM-STARTS the loop
       from a prior state instead of uniform 1/N — the restart path: a
       100 TB job killed at iteration k resumes from its checkpointed
@@ -222,8 +186,9 @@ def pagerank(
         ranks = titles.select("title", F.lit(1.0 / n).alias("rank"))
     contrib = F.col("r.rank") / F.col("e.outdeg")
     teleport = F.lit(1.0 - damping)
-    return _iterate(
-        titles, e, ranks, contrib, teleport, damping, iterations, checkpoint_dir
+    step = partial(_rank_round, titles, e, contrib, teleport, damping)
+    return iterate(
+        ranks, step, rounds=iterations, checkpoint_dir=checkpoint_dir
     )[0]
 
 
@@ -262,8 +227,9 @@ def weighted_pagerank(
     ranks = titles.select("title", F.lit(1.0 / n).alias("rank"))
     contrib = F.col("r.rank") * F.col("e.w") / F.col("e.wout")
     teleport = F.lit(1.0 - damping)
-    return _iterate(
-        titles, e, ranks, contrib, teleport, damping, iterations, checkpoint_dir
+    step = partial(_rank_round, titles, e, contrib, teleport, damping)
+    return iterate(
+        ranks, step, rounds=iterations, checkpoint_dir=checkpoint_dir
     )[0]
 
 
@@ -320,8 +286,9 @@ def personalized_pagerank(
     teleport = F.when(
         F.col("t.is_seed"), F.lit((1.0 - damping) / s)
     ).otherwise(F.lit(0.0))
-    return _iterate(
-        titles, e, ranks, contrib, teleport, damping, iterations, checkpoint_dir
+    step = partial(_rank_round, titles, e, contrib, teleport, damping)
+    return iterate(
+        ranks, step, rounds=iterations, checkpoint_dir=checkpoint_dir
     )[0]
 
 
@@ -353,9 +320,21 @@ def pagerank_until(
     )
     contrib = F.col("r.rank") / F.col("e.outdeg")
     teleport = F.lit(1.0 - damping)
-    ranks, done = _iterate(
-        titles, e, ranks, contrib, teleport, damping, max_iterations,
-        checkpoint_dir, tol=tol,
+
+    def converged(old: DataFrame, new: DataFrame) -> bool:
+        # one driver scalar per round: max |Δrank| over the old/new join
+        return (
+            new.alias("n")
+            .join(old.alias("o"), "title")
+            .agg(F.max(F.abs(F.col("n.rank") - F.col("o.rank"))).alias("d"))
+            .first()["d"]
+            < tol
+        )
+
+    step = partial(_rank_round, titles, e, contrib, teleport, damping)
+    ranks, done = iterate(
+        ranks, step, rounds=max_iterations, checkpoint_dir=checkpoint_dir,
+        stop=converged,
     )
     return ranks.select("title", "rank", F.lit(done).alias("iterations"))
 

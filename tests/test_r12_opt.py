@@ -1,5 +1,6 @@
 """Focused tests for the round-12 optimization changes: reliable
-checkpoint_dir threading through every lineage-truncating loop, the
+checkpoint_dir threading through every lineage-truncating loop (and the
+scale.iterate loop that carries it), the
 aggregate-based setsim prefix, measured-size streaming state
 partitions, and the keyed-default in undirected_edges."""
 
@@ -7,6 +8,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 SF = "/root/testdata/sf0.001"
@@ -57,83 +59,141 @@ def test_truncate_lineage_sets_checkpoint_dir_once(spark, tmp_path):
     assert len(os.listdir(d)) == 1
 
 
-def test_cc_reliable_checkpoint_dir(spark, tmp_path):
-    """connected_components with checkpoint_dir: identical labels to
-    the default path, and checkpoint files land in the dir (the lazy
-    per-round reliable checkpoints materialize under the final
-    action)."""
-    from pagerank_using_mapreduce_spark.operators.graph import (
-        connected_components,
-    )
-
-    pages = _pages(spark).persist()
-    d = str(tmp_path / "cc")
-    want = {
-        (r["title"], r["component"])
-        for r in connected_components(pages, iterations=3).collect()
-    }
-    # hold the frame: checkpoints are reclaimed once unreferenced
-    out = connected_components(pages, iterations=3, checkpoint_dir=d)
-    got = {(r["title"], r["component"]) for r in out.collect()}
-    assert got == want
-    assert _ckpt_files(d), "no reliable checkpoint files written"
-    pages.unpersist()
+def _rows(df) -> set:
+    return {tuple(r) for r in df.collect()}
 
 
-def test_kcore_and_truss_reliable_checkpoint_dir(spark, tmp_path):
-    """kcore_until (eager per-round) and truss_edges (eager per-round)
-    with checkpoint_dir: identical outputs, files in the dir."""
-    from pagerank_using_mapreduce_spark.operators.graph import (
-        cocitation_edges,
-        kcore_until,
-        truss_edges,
-    )
-
-    pages = _pages(spark).persist()
-    d1 = str(tmp_path / "kcore")
-    want = {r["title"] for r in kcore_until(pages).collect()}
-    out = kcore_until(pages, checkpoint_dir=d1)  # held, see cc test
-    got = {r["title"] for r in out.collect()}
-    assert got == want
-    assert _ckpt_files(d1)
-
-    d2 = str(tmp_path / "truss")
-    edges_ab = cocitation_edges(pages)
-    want_t = {
-        (r["a"], r["b"], r["support"])
-        for r in truss_edges(edges_ab).collect()
-    }
-    out_t = truss_edges(edges_ab, checkpoint_dir=d2)
-    got_t = {(r["a"], r["b"], r["support"]) for r in out_t.collect()}
-    assert got_t == want_t
-    assert _ckpt_files(d2)
-    pages.unpersist()
+_PAIRS = [(1, 2), (2, 3), (5, 6)]
 
 
-def test_cluster_pairs_reliable_checkpoint_dir(spark, tmp_path):
-    """cluster_pairs with checkpoint_dir: identical closure, files in
-    the dir."""
-    from pagerank_using_mapreduce_spark.operators.dedup import (
-        cluster_pairs,
-    )
+def _cluster_pairs(pages, **kw):
+    from pagerank_using_mapreduce_spark.operators.dedup import cluster_pairs
 
+    spark = pages.sparkSession
     docs = spark.createDataFrame(
         [(i, "t") for i in range(8)], "doc_id long, text string"
     )
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (5, 6)], "doc_a long, doc_b long"
+    pairs = spark.createDataFrame(_PAIRS, "doc_a long, doc_b long")
+    return cluster_pairs(docs, pairs, **kw)
+
+
+def _graph_loop(name, **fixed):
+    def run(pages, **kw):
+        from pagerank_using_mapreduce_spark.operators import graph
+
+        return getattr(graph, name)(pages, **fixed, **kw)
+
+    return run
+
+
+def _truss(pages, **kw):
+    from pagerank_using_mapreduce_spark.operators.graph import (
+        cocitation_edges,
+        truss_edges,
     )
-    d = str(tmp_path / "cp")
-    want = {
-        (r["doc_id"], r["canonical_id"])
-        for r in cluster_pairs(docs, pairs).collect()
-    }
-    out = cluster_pairs(docs, pairs, checkpoint_dir=d)  # held, see cc test
-    got = {(r["doc_id"], r["canonical_id"]) for r in out.collect()}
-    assert got == want == {
-        (0, 0), (1, 1), (2, 1), (3, 1), (4, 4), (5, 5), (6, 5), (7, 7)
-    }
-    assert _ckpt_files(d)
+
+    return truss_edges(cocitation_edges(pages), **kw)
+
+
+_SEEDS = ["doc_1", "doc_2", "doc_3"]
+RELIABLE_LOOPS = {
+    "connected_components": _graph_loop("connected_components", iterations=3),
+    "connected_components_until": _graph_loop("connected_components_until"),
+    "connected_components_star": _graph_loop("connected_components_star"),
+    "label_propagation": _graph_loop("label_propagation", rounds=2),
+    "bfs_depths": _graph_loop("bfs_depths", sources=_SEEDS, iterations=3),
+    "sssp_dists": _graph_loop("sssp_dists", sources=_SEEDS, iterations=3),
+    "bfs_depths_labeled": _graph_loop(
+        "bfs_depths_labeled", sources=_SEEDS, iterations=3
+    ),
+    "kcore_survivors": _graph_loop("kcore_survivors", rounds=3),
+    "kcore_until": _graph_loop("kcore_until"),
+    "truss_edges": _truss,
+    "cluster_pairs": _cluster_pairs,
+}
+
+
+@pytest.fixture(scope="module")
+def sf_pages(spark):
+    pages = _pages(spark).persist()
+    yield pages
+    pages.unpersist()
+
+
+@pytest.mark.parametrize("name", sorted(RELIABLE_LOOPS))
+def test_loop_reliable_checkpoint_dir(sf_pages, tmp_path, name):
+    """Every loop on scale.iterate with checkpoint_dir: identical
+    output to the default path, and checkpoint files in the dir."""
+    run = RELIABLE_LOOPS[name]
+    want = _rows(run(sf_pages))
+    d = str(tmp_path / name)
+    # hold the frame: checkpoints are reclaimed once unreferenced
+    out = run(sf_pages, checkpoint_dir=d)
+    assert _rows(out) == want
+    assert _ckpt_files(d), "no reliable checkpoint files written"
+    if name == "cluster_pairs":
+        assert want == {
+            (0, 0, True), (1, 1, True), (2, 1, False), (3, 1, False),
+            (4, 4, True), (5, 5, True), (6, 5, False), (7, 7, True),
+        }
+
+
+def _rdd_dirs(d: str) -> list[str]:
+    return [x for _, dn, _ in os.walk(d) for x in dn if x.startswith("rdd-")]
+
+
+def test_iterate_reclaims_superseded_checkpoints_and_resumes(
+    sf_pages, tmp_path
+):
+    """A reliable loop leaves only its last round on disk, and a loop
+    resumed from round k's checkpointed state matches the straight run
+    exactly (the i3_warm_start 4+6 ≡ 10 proof, reliable path)."""
+    from pagerank_using_mapreduce_spark.operators.pagerank import pagerank
+
+    straight = sorted(pagerank(sf_pages, iterations=10).collect())
+    d = str(tmp_path / "straight")
+    ranks = pagerank(sf_pages, iterations=10, checkpoint_dir=d)
+    assert ranks.count() == len(straight)
+    assert len(_rdd_dirs(d)) == 1
+    assert sorted(ranks.collect()) == straight
+
+    k = str(tmp_path / "resume")
+    round4 = pagerank(sf_pages, iterations=4, checkpoint_dir=k)
+    resumed = pagerank(
+        sf_pages, iterations=6, init_ranks=round4, checkpoint_dir=k
+    )
+    assert sorted(resumed.collect()) == straight
+    # round 4's state is the caller's: the resumed loop never deletes it
+    assert round4.count() == len(straight)
+    assert len(_rdd_dirs(k)) == 2
+
+
+def test_iterate_stop_rule_and_flat_state(spark):
+    """scale.iterate on a toy step: the stop rule ends the loop after
+    the first round that leaves its measure unchanged, and the returned
+    state's plan is one checkpoint leaf."""
+    from pagerank_using_mapreduce_spark.operators.scale import (
+        iterate,
+        unchanged,
+    )
+
+    state = spark.range(5).select(F.col("id").alias("x"))
+
+    def step(df):
+        return df.select(F.least(F.col("x") + 1, F.lit(7)).alias("x"))
+
+    def top(df):
+        return df.agg(F.max("x")).first()[0]
+
+    # max x: 5, 6, 7, 7 -> unchanged in round 4
+    out, rounds_run = iterate(
+        state, step, rounds=10, stop=unchanged(top, top(state))
+    )
+    assert rounds_run == 4
+    assert sorted(r["x"] for r in out.collect()) == [4, 5, 6, 7, 7]
+    plan = out._jdf.queryExecution().optimizedPlan()
+    assert plan.nodeName() == "LogicalRDD" and plan.children().isEmpty()
+    assert iterate(state, step, rounds=0) == (state, 0)
 
 
 def test_setsim_prefix_aggregate_matches_window_reference(spark):
@@ -327,16 +387,41 @@ def test_hits_signature_dropped_dead_cadence_param(spark):
     assert "checkpoint_dir" in params
 
 
-def test_loop_knobs_are_keyword_only(spark):
+LOOP_FAMILY = [
+    # (module, function, positional parameters)
+    ("pagerank", "pagerank", 1),
+    ("graph", "hits", 1),
+    ("graph", "connected_components", 1),
+    ("graph", "connected_components_until", 1),
+    ("graph", "connected_components_star", 1),
+    ("graph", "bfs_depths", 2),
+    ("graph", "bfs_depths_frontier", 2),
+    ("graph", "bfs_depths_labeled", 2),
+    ("graph", "sssp_dists", 2),
+    ("graph", "landmark_closeness", 2),
+    ("graph", "kcore_survivors", 1),
+    ("graph", "kcore_until", 1),
+    ("graph", "label_propagation", 1),
+    ("graph", "truss_edges", 1),
+    ("graph", "cocitation_edges", 1),
+    ("dedup", "cluster_pairs", 2),
+    ("dedup", "dedup_clusters", 1),
+]
+
+
+@pytest.mark.parametrize(
+    "module,name,positional", LOOP_FAMILY, ids=[f for _, f, _ in LOOP_FAMILY]
+)
+def test_loop_knobs_are_keyword_only(module, name, positional):
     """hits(pages, 10, "/tmp/x") used to bind the dir positionally;
-    the knobs after ``pages`` are keyword-only now."""
-    import pytest
+    every knob after the data arguments is keyword-only."""
+    import importlib
 
-    from pagerank_using_mapreduce_spark.operators.graph import hits
-    from pagerank_using_mapreduce_spark.operators.pagerank import pagerank
-
-    pages = spark.createDataFrame([], "title string, links array<string>")
+    fn = getattr(
+        importlib.import_module(
+            f"pagerank_using_mapreduce_spark.operators.{module}"
+        ),
+        name,
+    )
     with pytest.raises(TypeError):
-        hits(pages, 10, "/tmp/x")
-    with pytest.raises(TypeError):
-        pagerank(pages, 5, 10)
+        fn(*[None] * positional, 10)

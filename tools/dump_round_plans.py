@@ -1,5 +1,5 @@
 """Dump the TRUE per-round `.explain("formatted")` plans for the
-iterative loop family (pagerank / cc / hits / truss).
+iterative loop family (pagerank / cc / hits / bfs / truss).
 
 Usage: python tools/dump_round_plans.py <outdir> [--round=K] [--suffix=]
 
@@ -7,19 +7,21 @@ The loop operators truncate lineage every round, so the frame they
 RETURN explains to a flat leaf — "Exchange count 0" in that dump is
 truncation, not shuffle removal (VERDICT r11 §what's-wrong #5).  The
 honest structural evidence is the plan of ROUND K ITSELF: state built
-by running K-1 real rounds through the operators' own extracted round
-builders (pagerank._rank_round, graph._cc_round / _hits_pull /
-_truss_round — the loops call the same functions), then the round-K
-expression captured BEFORE its truncation.  A healthy loop shows the same small plan at every K; a
-broken one shows the plan doubling/tripling with K.
+by running K-1 real rounds of the operators' own round functions
+(pagerank._rank_round, graph._cc_round / _hits_pull / _relax_round /
+_truss_round) through scale.iterate — the loops run the same
+functions through the same loop — then the round-K expression
+captured BEFORE its truncation.  A healthy loop shows the same small
+plan at every K; a broken one shows the plan doubling/tripling with K.
 """
 
 from __future__ import annotations
 
 import os
 import sys
+from functools import partial
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -28,18 +30,21 @@ from pagerank_using_mapreduce_spark.operators.graph import (  # noqa: E402
     _cc_stage,
     _hits_pull,
     _hits_stage,
+    _relax_round,
     _truss_round,
     cocitation_edges,
+    valid_edges,
 )
 from pagerank_using_mapreduce_spark.operators.pagerank import (  # noqa: E402
     DAMPING,
-    _iterate,
     _rank_round,
     _stage,
     parse_corpus,
 )
 from pagerank_using_mapreduce_spark.operators.scale import (  # noqa: E402
-    adaptive_partitions,
+    cache,
+    iterate,
+    staged,
 )
 from pagerank_using_mapreduce_spark.session import get_spark  # noqa: E402
 from pagerank_using_mapreduce_spark.sources.tables import (  # noqa: E402
@@ -80,53 +85,58 @@ def main() -> int:
             f.write(plan)
         print(f"{name} round {k}: {shape_summary(plan)}")
 
-    # ---- pagerank: K-1 real rounds through the operator's own loop,
-    # then round K un-truncated
-    titles_p, e_p, n_p = _stage(pages)
-    ranks = titles_p.select("title", F.lit(1.0 / n_p).alias("rank"))
+    def warm(state, step, **kw):
+        """Round K's plan over the state after K-1 real rounds."""
+        return step(iterate(state, step, rounds=k - 1, **kw)[0])
+
+    # ---- pagerank
+    titles, e, n = _stage(pages)
+    ranks = titles.select("title", F.lit(1.0 / n).alias("rank"))
     contrib = F.col("r.rank") / F.col("e.outdeg")
     teleport = F.lit(1.0 - DAMPING)
-    ranks, _ = _iterate(
-        titles_p, e_p, ranks, contrib, teleport, DAMPING, k - 1, None
-    )
-    dump(
-        "i1_pagerank10",
-        _rank_round(titles_p, e_p, ranks, contrib, teleport, DAMPING),
-    )
+    rank_step = partial(_rank_round, titles, e, contrib, teleport, DAMPING)
+    dump("i1_pagerank10", warm(ranks, rank_step))
 
-    # ---- cc: K-1 real rounds (lazy-truncated, materialized by a
-    # count, exactly the operator's shape), then round K un-truncated
+    # ---- cc
     titles, sym = _cc_stage(pages)
     labels = titles.select("title", F.col("title").alias("component"))
-    for _ in range(k - 1):
-        labels = _cc_round(sym, labels).localCheckpoint(eager=False)
-        labels.count()  # the loop's fingerprint action stands in
-    dump("cc_components", _cc_round(sym, labels))
+    dump("cc_components", warm(labels, partial(_cc_round, sym)))
 
-    # ---- hits: K-1 real double-pull iterations, then iteration K
-    titles_h, e_src, e_dst, n = _hits_stage(pages)
-    auth = titles_h.select("title", F.lit(1.0 / n).alias("score"))
-    for _ in range(k - 1):
-        hub = _hits_pull(e_dst, auth, "src", "dst")
-        auth = _hits_pull(e_src, hub, "dst", "src").localCheckpoint(
-            eager=False
+    # ---- hits: the double pull; the loop's per-round norm, a literal
+    # rescale over the truncated leaf, is left out
+    titles, e_src, e_dst, n = _hits_stage(pages)
+    auth = titles.select("title", F.lit(1.0 / n).alias("score"))
+    dump(
+        "g4_hits",
+        warm(
+            auth,
+            lambda a: _hits_pull(
+                e_src, _hits_pull(e_dst, a, "src", "dst"), "dst", "src"
+            ),
+        ),
+    )
+
+    # ---- bfs: the min-plus relax round shared with sssp / landmarks
+    first = pages.select("title").orderBy("title").limit(3).collect()
+    seeds = [r["title"] for r in first]
+    with staged(pages) as (p, parts, _):
+        (e,) = cache(valid_edges(p).repartition(parts, "src"))
+        depths = (
+            p.select("title")
+            .where(F.col("title").isin(*seeds))
+            .select("title", F.lit(0).cast("long").alias("depth"))
         )
-        auth.count()  # the loop's norm action stands in
-    dump("g4_hits", _hits_pull(e_src, _hits_pull(e_dst, auth, "src", "dst"), "dst", "src"))
+        dump(
+            "g5_bfs_depths",
+            warm(depths, partial(_relax_round, e, F.col("d.depth") + 1)),
+        )
 
-    # ---- truss: K-1 real peel rounds (eager-truncated, the
-    # operator's own shape), then round K un-truncated
-    e = cocitation_edges(pages)
-    e = e.select("a", "b").persist()
-    parts = adaptive_partitions(spark, e.count())
-    for _ in range(k - 1):
-        nxt, oriented = _truss_round(e, 4, parts)
-        nxt = nxt.localCheckpoint(eager=True)
-        e.unpersist()
-        oriented.unpersist()
-        e = nxt
-    peeled, _o = _truss_round(e, 4, parts)
-    dump("g13_truss_edges", peeled)
+    # ---- truss: eager rounds, the operator's own truncation
+    with staged(cocitation_edges(pages).select("a", "b")) as (e, parts, _):
+        dump(
+            "g13_truss_edges",
+            warm(e, lambda x: _truss_round(x, 4, parts)[0], eager=True),
+        )
 
     spark.stop()
     return 0
