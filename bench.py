@@ -292,87 +292,6 @@ def _env_fingerprint() -> dict:
     return fp
 
 
-def _bpe_rich_corpus(spark, n_docs: int = 5000, words: int = 4):
-    """A char-diverse synthetic corpus for the batched-BPE evidence
-    rows: md5 hex with digits mapped to letters g-p gives 32-char
-    words over a 16-letter alphabet, so >= 1k distinct merges exist
-    (the shipped documents text exhausts its pair vocabulary at ~90
-    merges — VERDICT r06 #4).  Pure column expressions of doc_id:
-    deterministic, layout-stable."""
-    from pyspark.sql import functions as F
-
-    cols = [
-        F.translate(
-            F.md5(F.concat_ws("|", F.lit(str(j)), F.col("id").cast("string"))),
-            "0123456789",
-            "ghijklmnop",
-        )
-        for j in range(words)
-    ]
-    return spark.range(n_docs).select(
-        F.col("id").alias("doc_id"), F.concat_ws(" ", *cols).alias("text")
-    )
-
-
-def _bpe_batched_evidence(spark) -> dict:
-    """VERDICT r06 #4 'done' rows: on a corpus where >= 1k merges
-    exist, (a) batched training toward 1024 merges at batch 64 takes
-    ~merges/batch driver round-trips, and (b) the wall-time ratio
-    batched-vs-sequential at an equal merge count is recorded."""
-    from pagerank_using_mapreduce_spark.operators.bpe import bpe_merges_batched
-
-    corpus = _bpe_rich_corpus(spark)
-    out: dict = {}
-
-    # (a) 1k-merge scale row: batch 64, candidate lookahead 8192 (the
-    # greedy disjointness rule caps early rounds at ~alphabet/2 pairs;
-    # with a deep lookahead batches fill to 64 by round ~15 — late
-    # rounds show the O(merges/batch) asymptote: kept/round measured
-    # 10,14,19,...,63,64,64,64,64 on this corpus)
-    target, batch, lookahead = 1024, 64, 8192
-    rounds_cap = 26
-    t0 = time.time()
-    rows = bpe_merges_batched(
-        corpus, rounds=rounds_cap, batch=batch, lookahead=lookahead
-    ).collect()
-    out["batched_1k"] = {
-        "target_merges": target,
-        "batch": batch,
-        "lookahead": lookahead,
-        "merges_landed": len(rows),
-        "driver_roundtrips": len({r["round"] for r in rows}),
-        "sec": round(time.time() - t0, 3),
-    }
-
-    # (b) head-to-head wall-time ratio, normalized PER MERGE LANDED
-    # (sequential 1024 merges = 1024 Spark jobs would dominate the
-    # whole bench, so the ratio is measured at a 64-merge head)
-    head = 64
-    t0 = time.time()
-    seq = bpe_merges_batched(corpus, rounds=head, batch=1).collect()
-    seq_sec = time.time() - t0
-    t0 = time.time()
-    bat = bpe_merges_batched(
-        corpus, rounds=8, batch=head, lookahead=512
-    ).collect()
-    bat_sec = time.time() - t0
-    per_merge = (
-        (seq_sec / len(seq)) / (bat_sec / len(bat))
-        if seq and bat and bat_sec
-        else None
-    )
-    out["seq_vs_batched_64"] = {
-        "seq_merges": len(seq),
-        "seq_roundtrips": head,
-        "seq_sec": round(seq_sec, 3),
-        "batched_merges": len(bat),
-        "batched_roundtrips": len({r["round"] for r in bat}),
-        "batched_sec": round(bat_sec, 3),
-        "per_merge_speedup": round(per_merge, 2) if per_merge else None,
-    }
-    return out
-
-
 def _run(spark, name: str, sf_dir: str, reps: int) -> list[float]:
     samples = []
     for _ in range(reps):
@@ -569,13 +488,7 @@ def main() -> None:
     timings_norm = {n: round(v / drift, 3) for n, v in timings.items()}
     total_norm = round(sum(timings_norm.values()), 3)
 
-    # BPE evidence rides the main session, BEFORE the decade
-    # subprocesses so the sf0.1-scale record is complete first
     env = _env_fingerprint()
-    try:
-        bpe_ev = _bpe_batched_evidence(spark) if not only else {}
-    except Exception as e:  # evidence row must never sink the bench
-        bpe_ev = {"error": str(e)[:200]}
 
     # free the main session's heap/threads before the decade JVMs
     # spin up (idempotent; the final stop() below stays a no-op)
@@ -618,7 +531,6 @@ def main() -> None:
                 "load_suspects": load_suspects,
                 "queries_canary_normalized": timings_norm,
                 "value_canary_normalized": total_norm,
-                "bpe_batched": bpe_ev,
                 "sf1_queries": sf1_timings,
                 "sf1_vg_queries": sf1_vg_timings,
                 "decade_errors": decade_errors,
@@ -678,7 +590,6 @@ def main() -> None:
                 "sf1_vg_queries": sf1_vg_timings,
                 "decade_errors": decade_errors,
                 "env": env,
-                "bpe_batched": bpe_ev,
             }
         ),
         flush=True,

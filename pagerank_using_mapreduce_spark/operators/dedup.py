@@ -168,45 +168,6 @@ def shingle_arrays(docs: DataFrame, k: int = 3) -> DataFrame:
     )
 
 
-def minhash_signatures_arr(sha: DataFrame, n_hashes: int = N_HASHES) -> DataFrame:
-    """(doc_id, sig_0..sig_{n-1}) from the array-form shingle relation:
-    each minhash is array_min over the per-element md5 — the same
-    lexicographic min over the same md5(seed|shingle) strings as
-    :func:`minhash_signatures`, but computed in ONE whole-stage-codegen
-    projection with no explode, no sort, and no aggregate exchange.
-    (min is duplicate-insensitive, so distinct-or-not agrees too.)"""
-    # two chained transforms so the md5 runs once per element: the
-    # word extraction operates on the already-hashed string, not on a
-    # per-word re-embedded md5(s) subtree.
-    ms = sha.select(
-        "doc_id", F.transform(F.col("sh"), lambda s: F.md5(s)).alias("ms")
-    )
-    ws = ms.select(
-        "doc_id",
-        F.transform(
-            F.col("ms"),
-            lambda m: F.struct(
-                *[w.alias(f"w_{i}") for i, w in enumerate(_md5_words(m))]
-            ),
-        ).alias("ws"),
-    )
-
-    def _sig(j: int):
-        # NB: the transform lambda must take exactly ONE parameter —
-        # an extra captured `j=j` default changes the declared arity,
-        # which PySpark reads as an (element, index) lambda.
-        return F.array_min(
-            F.transform(
-                "ws",
-                lambda w: _minhash_perm(
-                    w["w_0"], w["w_1"], w["w_2"], w["w_3"], j
-                ),
-            )
-        ).alias(f"sig_{j}")
-
-    return ws.select("doc_id", *[_sig(j) for j in range(n_hashes)])
-
-
 # Universal-hash minhash permutations: ONE md5 per shingle (all four
 # 32-bit words w0..w3 of the 128-bit digest), then each of the K
 # minhashes is min over
@@ -1054,7 +1015,6 @@ def cluster_pairs(
     pairs: DataFrame,
     *,
     max_rounds: int = MAX_CLUSTER_ROUNDS,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Transitive closure of an explicit near-dup pair relation to the
     FIXPOINT: min-label propagation with a zero-changes stop rule (the
@@ -1069,9 +1029,6 @@ def cluster_pairs(
     (persisted) symmetric pair relation + one min-agg + ONE NARROW
     fingerprint aggregate for the stop test — the cc_converged
     count-first discipline on an O(|pairs|) relation.
-
-    ``checkpoint_dir``: reliable per-round checkpoints instead of
-    executor-local blocks (operators.scale.iterate).
     """
     pairs = pairs.select("doc_a", "doc_b").persist()
     # size the iteration's partitioning from the MEASURED pair count
@@ -1096,14 +1053,12 @@ def cluster_pairs(
         sym.select(F.col("doc_a").alias("doc_id"))
         .distinct()
         .withColumn("label", F.col("doc_id"))
-        .repartition(parts, "doc_id"),
-        checkpoint_dir,
+        .repartition(parts, "doc_id")
     )
     labels, _ = iterate(
         labels,
         partial(_pull_min, sym),
         rounds=max_rounds,
-        checkpoint_dir=checkpoint_dir,
         stop=label_fixpoint(labels, "doc_id", "label"),
     )
     # labels is a checkpointed frame (materialized by the fingerprint
@@ -1129,19 +1084,14 @@ def dedup_clusters(
     *,
     max_rounds: int = MAX_CLUSTER_ROUNDS,
     sha: DataFrame | None = None,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """(doc_id, canonical_id, is_canonical): every document mapped to
     the min doc_id of its near-duplicate cluster (transitive closure of
     :func:`near_dup_pipeline` pairs, run to the fixpoint); docs in no
     pair map to themselves.  ``sha``: caller-materialized shingle base
     (see :func:`near_dup_pipeline`)."""
-    return cluster_pairs(
-        docs,
-        near_dup_pipeline(docs, sha),
-        max_rounds=max_rounds,
-        checkpoint_dir=checkpoint_dir,
-    )
+    pairs = near_dup_pipeline(docs, sha)
+    return cluster_pairs(docs, pairs, max_rounds=max_rounds)
 
 
 def dedup_clusters_sql(docs_sql: str, rounds: int = CLUSTER_ROUNDS) -> str:

@@ -23,9 +23,11 @@ from pyspark.sql import functions as F
 
 from .pagerank import edges
 from .scale import (
+    _supersede,
     cache,
     iterate,
     label_fixpoint,
+    reliable,
     staged,
     truncate_lineage,
     unchanged,
@@ -132,7 +134,6 @@ def connected_components(
     pages: DataFrame,
     *,
     iterations: int = CC_ITERATIONS,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """(title, component): hash-min propagation for ``iterations``
     rounds over the undirected link graph.
@@ -142,22 +143,17 @@ def connected_components(
     aggregation + one left join back to all nodes, exactly the
     PageRank iteration shape with sum→min.  Isolated pages keep their
     own title as component.
-
-    ``checkpoint_dir``: when set, the per-round lineage truncation is a
-    RELIABLE checkpoint to that dir instead of executor-local blocks —
-    iteration state survives executor loss (scale.iterate).
     """
     titles, sym = _cc_stage(pages)
     labels = titles.select("title", F.col("title").alias("component"))
     step = partial(_cc_round, sym)
-    return iterate(labels, step, rounds=iterations, checkpoint_dir=checkpoint_dir)[0]
+    return iterate(labels, step, rounds=iterations)[0]
 
 
 def connected_components_until(
     pages: DataFrame,
     *,
     max_iterations: int = 50,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """(title, component, iterations): hash-min propagation to the
     FIXPOINT — iterate until no label changes (the true components;
@@ -172,20 +168,15 @@ def connected_components_until(
     pointer jumping (large/small-star) for O(log d) rounds; hash-min
     keeps the per-round plan identical to the oracle-checked fixed-k
     operator.
-
-    ``checkpoint_dir``: reliable per-round checkpoints instead of
-    executor-local blocks (scale.iterate).
     """
     titles, sym = _cc_stage(pages)
     labels = truncate_lineage(
-        titles.select("title", F.col("title").alias("component")),
-        checkpoint_dir,
+        titles.select("title", F.col("title").alias("component"))
     )
     labels, done = iterate(
         labels,
         partial(_cc_round, sym),
         rounds=max_iterations,
-        checkpoint_dir=checkpoint_dir,
         stop=label_fixpoint(labels, "title", "component"),
     )
     return labels.select("title", "component", F.lit(done).alias("iterations"))
@@ -240,7 +231,6 @@ def connected_components_star(
     pages: DataFrame,
     *,
     max_rounds: int = 40,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """(title, component): connected components in O(log n) rounds via
     alternating large-star / small-star edge rewriting (Kiveris et al.,
@@ -277,13 +267,12 @@ def connected_components_star(
     # half of it away; canonicalizing before the distinct halves the
     # dedup's shuffle input for the identical output set (guide §2.3:
     # shuffle fewer bytes).
-    edges = truncate_lineage(_canonical_undirected(pages), checkpoint_dir)
+    edges = truncate_lineage(_canonical_undirected(pages))
     n_edges = edges.count()
     edges, _ = iterate(
         edges,
         _star_round,
         rounds=max_rounds if n_edges else 0,
-        checkpoint_dir=checkpoint_dir,
         stop=unchanged(
             lambda df: df.count(),
             n_edges,
@@ -439,7 +428,6 @@ def hits(
     pages: DataFrame,
     *,
     iterations: int = HITS_ITERATIONS,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """(title, hub, authority): Kleinberg's HITS by mutual power
     iteration over the directed valid-edge graph, emitted L1-normalized
@@ -469,12 +457,6 @@ def hits(
     relative, which the e6 quantization nudge absorbs — an L2 sqrt on
     an order-dependent sum-of-squares would be harder to pin down.
 
-    ``checkpoint_dir``: reliable per-iteration checkpoints instead of
-    executor-local blocks (scale.truncate_lineage).  (The old
-    ``checkpoint_every`` cadence knob is gone: per-iteration lazy
-    truncation replaced the cadence entirely, so the parameter had
-    become silently dead — callers tuning it got no behavior.)
-
     The loop is not scale.iterate's ``state → step(state)`` shape: the
     norm scalar rescales the TRUNCATED pull, and the final hub is the
     last iteration's intermediate pull, not its state.
@@ -490,16 +472,16 @@ def hits(
     titles, e_src, e_dst, n = _hits_stage(pages)
 
     auth = titles.select("title", F.lit(1.0 / n).alias("score"))
-    hub_un = auth
+    hub_un, kept = auth, [None, None]
     for _ in range(iterations):
         hub_un = _hits_pull(e_dst, auth, "src", "dst")  # Σ_{v→u} auth(u)
         # per-iteration truncation, for the reason scale.iterate gives;
         # the norm action in _l1 runs its last stage
-        auth = _l1(
-            truncate_lineage(
-                _hits_pull(e_src, hub_un, "dst", "src"), checkpoint_dir
-            )  # Σ_{v→u} hub(v)
-        )
+        pull = truncate_lineage(_hits_pull(e_src, hub_un, "dst", "src"))
+        auth = _l1(pull)  # Σ_{v→u} hub(v)
+        # a written reliable round supersedes the one before last: the
+        # final hub reads the last-but-one round's files
+        kept = [kept[1], _supersede(kept[0], pull)]
     hub = _l1(hub_un.persist())
     out = (
         titles.alias("t")
@@ -540,14 +522,15 @@ def _relax_round(e: DataFrame, hop: Column, d: DataFrame) -> DataFrame:
     return d.unionAll(expanded).groupBy(*keys).agg(F.min(value).alias(value))
 
 
-def _relax(pages, sources, seed, hop, iterations, checkpoint_dir, w=None):
+def _relax(pages, sources, seed, hop, iterations, w=None):
     """The min-plus loop of :func:`bfs_depths`, :func:`sssp_dists` and
     :func:`bfs_depths_labeled`: the ``seed`` columns over the source
     titles start the state, which relaxes for ``iterations`` rounds
     through the valid-edge cache (with edge weight ``w`` when given).
 
     The state is eagerly truncated BEFORE the page cache is released:
-    the seed leaf scans pages (a corpus re-parse once uncached).  The
+    the seed leaf scans pages (a corpus re-parse once uncached).  A
+    reliable session's rounds are already written eagerly.  The
     edge cache stays persisted DELIBERATELY: the cache manager dedups by
     logical plan, so every BFS op in the session (bfs_depths_frontier
     too) reuses one cached adjacency instead of rebuilding it per call —
@@ -559,8 +542,8 @@ def _relax(pages, sources, seed, hop, iterations, checkpoint_dir, w=None):
         (e,) = cache(e.repartition(parts, "src"))
         d = p.select("title").where(F.col("title").isin(*sources)).select(*seed)
         step = partial(_relax_round, e, hop)
-        d = iterate(d, step, rounds=iterations, checkpoint_dir=checkpoint_dir)[0]
-        return truncate_lineage(d, checkpoint_dir, eager=True)
+        d, done = iterate(d, step, rounds=iterations)
+        return d if done and reliable(d) else truncate_lineage(d, eager=True)
 
 
 def bfs_depths(
@@ -568,7 +551,6 @@ def bfs_depths(
     sources: list[str],
     *,
     iterations: int = BFS_ITERATIONS,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """(title, depth): minimum number of directed link hops from any
     page in ``sources``, for every page reachable within ``iterations``
@@ -593,8 +575,7 @@ def bfs_depths(
         raise ValueError("bfs_depths needs a non-empty source set")
     depth = F.lit(0).cast("long").alias("depth")
     return _relax(
-        pages, sources, ["title", depth], F.col("d.depth") + 1, iterations,
-        checkpoint_dir,
+        pages, sources, ["title", depth], F.col("d.depth") + 1, iterations
     )
 
 
@@ -603,7 +584,6 @@ def bfs_depths_frontier(
     sources: list[str],
     *,
     max_iterations: int = 64,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """(title, depth): the frontier-delta BFS — the diameter-scale
     alternative :func:`bfs_depths` documents.  Each round expands ONLY
@@ -631,7 +611,6 @@ def bfs_depths_frontier(
             p.select("title")
             .where(F.col("title").isin(*sources))
             .select("title", F.lit(0).cast("long").alias("depth")),
-            checkpoint_dir,
             eager=True,
         )
     # settled = union of per-depth frontier parts, each part an
@@ -661,7 +640,7 @@ def bfs_depths_frontier(
             .join(settled.select("title"), "title", "left_anti")
             .select("title", F.lit(depth).cast("long").alias("depth"))
         )
-        nxt = truncate_lineage(nxt, checkpoint_dir, eager=True)
+        nxt = truncate_lineage(nxt, eager=True)
         if nxt.count() == 0:  # S5 stop rule: frontier exhausted
             break
         settled = settled.unionAll(nxt)
@@ -679,7 +658,7 @@ KCORE_K = 2
 KCORE_ROUNDS = 6
 
 
-def _peel(pages, k, rounds, checkpoint_dir, until):
+def _peel(pages, k, rounds, until):
     """The k-core peel loop of :func:`kcore_survivors` (a fixed budget
     of ``rounds``) and :func:`kcore_until` (``until``: stop at the
     first round without removals, up to ``rounds``).
@@ -690,22 +669,22 @@ def _peel(pages, k, rounds, checkpoint_dir, until):
     truncated and REPLACES the edge relation: it is referenced by both
     next round's semi-joins AND the degree aggregate, and it strictly
     shrinks — on power-law graphs most peeling happens up front, so
-    later rounds scan a fraction of the original edges."""
+    later rounds scan a fraction of the original edges.  Its reliable
+    checkpoint supersedes the previous round's, like the state's."""
     with staged(pages) as (p, parts, _):
         (sym,) = cache(undirected_edges(p, key="src", num_partitions=parts))
-    alive = [sym]
+    alive = [sym, None]  # survivor edges, their checkpoint file
 
     def peel(nodes: DataFrame) -> DataFrame:
         e = truncate_lineage(
             alive[0]
             .join(nodes.select(F.col("title").alias("src")), "src", "left_semi")
             .join(nodes.select(F.col("title").alias("dst")), "dst", "left_semi"),
-            checkpoint_dir,
             eager=True,
         )
         # the staged cache after round 1; a no-op on checkpoint frames
         alive[0].unpersist()
-        alive[0] = e
+        alive[:] = [e, _supersede(alive[1], e)]
         return (
             e.groupBy("src")
             .agg(F.count("*").alias("deg"))
@@ -720,9 +699,7 @@ def _peel(pages, k, rounds, checkpoint_dir, until):
         # driver count per round doubles as the stop test
         nodes = nodes.persist()
         stop = unchanged(lambda df: df.count(), nodes.count())
-    out, _ = iterate(
-        nodes, peel, rounds=rounds, checkpoint_dir=checkpoint_dir, stop=stop
-    )
+    out, _ = iterate(nodes, peel, rounds=rounds, stop=stop)
     nodes.unpersist()
     return out
 
@@ -732,7 +709,6 @@ def kcore_survivors(
     *,
     k: int = KCORE_K,
     rounds: int = KCORE_ROUNDS,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """(title,): nodes surviving ``rounds`` of k-core peeling on the
     undirected link graph — each round removes every node whose degree
@@ -741,7 +717,7 @@ def kcore_survivors(
     keeps the op deterministic and the oracle unrollable (the peeling
     sequence is integer-only: no float risk anywhere).  Per-round shape:
     :func:`_peel`."""
-    return _peel(pages, k, rounds, checkpoint_dir, until=False)
+    return _peel(pages, k, rounds, until=False)
 
 
 KCORE_MAX_ROUNDS = 50  # convergence-loop safety cap
@@ -752,7 +728,6 @@ def kcore_until(
     *,
     k: int = KCORE_K,
     max_rounds: int = KCORE_MAX_ROUNDS,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """(title,): the TRUE k-core — peel to the fixpoint with a
     zero-removals stop rule instead of :func:`kcore_survivors`' fixed
@@ -760,7 +735,7 @@ def kcore_until(
     ``connected_components_until``).  Peeling is idempotent past the
     fixpoint, which is what lets the oracle use a fixed upper-bound
     unroll."""
-    return _peel(pages, k, max_rounds, checkpoint_dir, until=True)
+    return _peel(pages, k, max_rounds, until=True)
 
 
 def kcore_sql(pages_ctes: str, sym_cte: str, k: int = KCORE_K,
@@ -815,7 +790,6 @@ def label_propagation(
     pages: DataFrame,
     *,
     rounds: int = LPA_ROUNDS,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """(title, community): synchronous label propagation over the
     undirected valid-edge graph — each round every node adopts its
@@ -837,7 +811,7 @@ def label_propagation(
     titles, sym = _cc_stage(pages, key="dst")
     labels = titles.select("title", F.col("title").alias("label"))
     step = partial(_lpa_round, sym)
-    labels = iterate(labels, step, rounds=rounds, checkpoint_dir=checkpoint_dir)[0]
+    labels = iterate(labels, step, rounds=rounds)[0]
     return labels.select("title", F.col("label").alias("community"))
 
 
@@ -893,7 +867,6 @@ def sssp_dists(
     sources: list[str],
     *,
     iterations: int = SSSP_ITERATIONS,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """(title, dist): minimum weighted distance from any source within
     ``iterations`` relaxation rounds (Bellman-Ford on the min-plus
@@ -909,7 +882,7 @@ def sssp_dists(
     dist = F.lit(0).cast("long").alias("dist")
     return _relax(
         pages, sources, ["title", dist], F.col("d.dist") + F.col("e.w"),
-        iterations, checkpoint_dir, w=edge_weight(F.col("dst")),
+        iterations, w=edge_weight(F.col("dst")),
     )
 
 
@@ -918,7 +891,6 @@ def bfs_depths_labeled(
     sources: list[str],
     *,
     iterations: int = 8,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """(seed, title, depth): per-SEED minimum hop counts — k
     independent BFS traversals in ONE loop, the state keyed by
@@ -937,7 +909,7 @@ def bfs_depths_labeled(
     depth = F.lit(0).cast("long").alias("depth")
     return _relax(
         pages, sources, [F.col("title").alias("seed"), "title", depth],
-        F.col("d.depth") + 1, iterations, checkpoint_dir,
+        F.col("d.depth") + 1, iterations,
     )
 
 
@@ -946,7 +918,6 @@ def landmark_closeness(
     sources: list[str],
     *,
     iterations: int = 8,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """(title, n_seen, total_depth, closeness_e6) for every node some
     landmark reaches in 1..``iterations`` hops: closeness approximated
@@ -957,9 +928,7 @@ def landmark_closeness(
     closeness convention — which also makes total_depth > 0 wherever a
     row exists.  The division is one small-int-over-int-sum IEEE op,
     identical cross-engine."""
-    d = bfs_depths_labeled(
-        pages, sources, iterations=iterations, checkpoint_dir=checkpoint_dir
-    )
+    d = bfs_depths_labeled(pages, sources, iterations=iterations)
     return (
         d.where(F.col("depth") > 0)
         .groupBy("title")
@@ -999,7 +968,6 @@ def cocitation_edges(
     pages: DataFrame,
     *,
     max_indeg: int = COCITE_MAX_INDEG,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Canonical (a, b) co-citation edges: two pages are linked iff
     they cite a common target.  The per-target pair fan-out is
@@ -1036,9 +1004,8 @@ def cocitation_edges(
         .distinct()
     )
     # pin the pair relation so the staging cache can be freed now; the
-    # blocks die with the returned frame (reliable when checkpoint_dir
-    # is set)
-    out = truncate_lineage(out, checkpoint_dir, eager=True)
+    # blocks die with the returned frame
+    out = truncate_lineage(out, eager=True)
     e.unpersist()
     return out
 
@@ -1121,7 +1088,6 @@ def truss_edges(
     *,
     k: int = TRUSS_K,
     rounds: int = TRUSS_ROUNDS,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """(a, b, support): canonical (a < b) undirected edges surviving
     ``rounds`` of k-truss peeling, with their last-evaluated triangle
@@ -1154,9 +1120,7 @@ def truss_edges(
     with staged(edges_ab.select("a", "b")) as (e, parts, _):
         # eager: one materialization job per round, as persist+count
         # would pay, and the round's oriented cache can go
-        out, _ = iterate(
-            e, peel, rounds=rounds, checkpoint_dir=checkpoint_dir, eager=True
-        )
+        out, _ = iterate(e, peel, rounds=rounds, eager=True)
     for df in held:
         df.unpersist()
     return out.select("a", "b", "support")
@@ -1232,7 +1196,6 @@ def adamic_adar(
     pages: DataFrame,
     max_deg: int = AA_MAX_DEG,
     min_common: int = AA_MIN_COMMON,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """(a, b, n_common, aa_e9) for UNLINKED undirected pairs a < b
     with >= ``min_common`` shared neighbors of degree in
@@ -1288,7 +1251,6 @@ def adamic_adar(
             ["a", "b"],
             "left_anti",  # predicted links only — drop existing edges
         ),
-        checkpoint_dir,
         eager=True,  # pin before freeing the staging cache
     )
     und.unpersist()
@@ -1343,14 +1305,11 @@ WHERE NOT EXISTS (SELECT 1 FROM sym WHERE sym.src = pairs.a AND sym.dst = pairs.
 def local_clustering(
     pages: DataFrame,
     max_indeg: int = COCITE_MAX_INDEG,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """(title, deg, n_tri, lcc_e6) for co-citation nodes with deg >= 2
     (deg < 2 has no defined coefficient)."""
     # canonical a<b, pinned
-    e = cocitation_edges(
-        pages, max_indeg=max_indeg, checkpoint_dir=checkpoint_dir
-    )
+    e = cocitation_edges(pages, max_indeg=max_indeg)
     both = e.select(F.col("a").alias("t")).unionAll(
         e.select(F.col("b").alias("t"))
     )
@@ -1537,16 +1496,13 @@ FROM sums"""
 def local_bridges(
     pages: DataFrame,
     max_indeg: int = COCITE_MAX_INDEG,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """(a, b, deg_a, deg_b): canonical (a < b) co-citation edges in no
     triangle, with endpoint degrees (a local bridge with deg 1 on
     either side is a pendant, not a community connector — callers
     filter on the degrees)."""
     # canonical a<b, pinned
-    e = cocitation_edges(
-        pages, max_indeg=max_indeg, checkpoint_dir=checkpoint_dir
-    )
+    e = cocitation_edges(pages, max_indeg=max_indeg)
     tri = (
         e.alias("e1")
         .join(e.alias("e2"), F.col("e2.a") == F.col("e1.b"))

@@ -150,7 +150,6 @@ def pagerank(
     n: int | None = None,
     iterations: int = ITERATIONS,
     damping: float = DAMPING,
-    checkpoint_dir: str | None = None,
     init_ranks: DataFrame | None = None,
 ) -> DataFrame:
     """I1 + J1/J2 + A4/A5: the full fixed-point loop → (title, rank).
@@ -164,11 +163,11 @@ def pagerank(
       no round pays a dedicated materialization job.  Lazy is not
       deferred: under AQE the truncation runs each round's shuffle
       stages when it is called (at sf0.1 on ``local[4]``: 50 jobs
-      while this function runs, 2 on the ``count()`` after it).  With
-      ``checkpoint_dir`` set each round is written as a RELIABLE
-      checkpoint (restart durability on a cluster), which computes the
-      round a second time, and the superseded round's files are
-      deleted;
+      while this function runs, 2 on the ``count()`` after it).  On a
+      session with a checkpoint dir each round is written as a
+      RELIABLE checkpoint (restart durability on a cluster), which
+      computes the round a second time, and the superseded round's
+      files are deleted;
     - ``init_ranks`` (a (title, rank) DataFrame) WARM-STARTS the loop
       from a prior state instead of uniform 1/N — the restart path: a
       100 TB job killed at iteration k resumes from its checkpointed
@@ -187,9 +186,7 @@ def pagerank(
     contrib = F.col("r.rank") / F.col("e.outdeg")
     teleport = F.lit(1.0 - damping)
     step = partial(_rank_round, titles, e, contrib, teleport, damping)
-    return iterate(
-        ranks, step, rounds=iterations, checkpoint_dir=checkpoint_dir
-    )[0]
+    return iterate(ranks, step, rounds=iterations)[0]
 
 
 def weighted_pagerank(
@@ -198,7 +195,6 @@ def weighted_pagerank(
     n: int | None = None,
     iterations: int = ITERATIONS,
     damping: float = DAMPING,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Edge-weighted PageRank: a source splits its rank over out-edges
     proportionally to edge WEIGHT (w / Σw) instead of uniformly
@@ -228,9 +224,7 @@ def weighted_pagerank(
     contrib = F.col("r.rank") * F.col("e.w") / F.col("e.wout")
     teleport = F.lit(1.0 - damping)
     step = partial(_rank_round, titles, e, contrib, teleport, damping)
-    return iterate(
-        ranks, step, rounds=iterations, checkpoint_dir=checkpoint_dir
-    )[0]
+    return iterate(ranks, step, rounds=iterations)[0]
 
 
 SEED_ISIN_MAX = 64  # above this, seeds go cluster-side via broadcast join
@@ -243,7 +237,6 @@ def personalized_pagerank(
     iterations: int = ITERATIONS,
     damping: float = DAMPING,
     seed_isin_max: int = SEED_ISIN_MAX,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Personalized PageRank: teleport mass returns only to ``sources``
     (uniformly), not to every page — relevance ranking *relative to a
@@ -287,9 +280,7 @@ def personalized_pagerank(
         F.col("t.is_seed"), F.lit((1.0 - damping) / s)
     ).otherwise(F.lit(0.0))
     step = partial(_rank_round, titles, e, contrib, teleport, damping)
-    return iterate(
-        ranks, step, rounds=iterations, checkpoint_dir=checkpoint_dir
-    )[0]
+    return iterate(ranks, step, rounds=iterations)[0]
 
 
 def pagerank_until(
@@ -298,7 +289,6 @@ def pagerank_until(
     tol: float = 1e-6,
     max_iterations: int = 50,
     damping: float = DAMPING,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Convergence-terminated PageRank — an extension the reference
     deliberately lacks (fixed 10 rounds, README.md:70): iterate until
@@ -316,7 +306,7 @@ def pagerank_until(
     if n == 0:
         return _empty(titles, F.lit(0).alias("iterations"))
     ranks = truncate_lineage(
-        titles.select("title", F.lit(1.0 / n).alias("rank")), checkpoint_dir
+        titles.select("title", F.lit(1.0 / n).alias("rank"))
     )
     contrib = F.col("r.rank") / F.col("e.outdeg")
     teleport = F.lit(1.0 - damping)
@@ -332,10 +322,7 @@ def pagerank_until(
         )
 
     step = partial(_rank_round, titles, e, contrib, teleport, damping)
-    ranks, done = iterate(
-        ranks, step, rounds=max_iterations, checkpoint_dir=checkpoint_dir,
-        stop=converged,
-    )
+    ranks, done = iterate(ranks, step, rounds=max_iterations, stop=converged)
     return ranks.select("title", "rank", F.lit(done).alias("iterations"))
 
 

@@ -103,7 +103,6 @@ def iterate(
     step: Callable[[DataFrame], DataFrame],
     *,
     rounds: int,
-    checkpoint_dir: str | None = None,
     stop: Callable[[DataFrame, DataFrame], bool] | None = None,
     eager: bool = False,
 ) -> tuple[DataFrame, int]:
@@ -118,17 +117,17 @@ def iterate(
     old every-4th/5th-round checkpoints; a truncated state is a flat
     leaf, so every round plans the same small plan.
 
-    With ``checkpoint_dir`` each round is written eagerly as a reliable
-    checkpoint and the previous round's files are deleted once the new
-    ones are confirmed written: a finished loop leaves only its last
-    round on disk (the caller's initial ``state`` is never deleted)."""
+    On a session with a checkpoint dir (:func:`reliable`) each round is
+    written eagerly as a reliable checkpoint and the previous round's
+    files are deleted once the new ones are confirmed written: a
+    finished loop leaves only its last round on disk (the caller's
+    initial ``state`` is never deleted)."""
+    durable = reliable(state)
     done, written = 0, None
     for done in range(1, rounds + 1):
-        new = truncate_lineage(
-            step(state), checkpoint_dir, eager or checkpoint_dir is not None
-        )
+        new = truncate_lineage(step(state), eager or durable)
         halt = stop is not None and stop(state, new)
-        if checkpoint_dir is not None:
+        if durable:
             written = _supersede(written, new)
         state = new
         if halt:
@@ -138,7 +137,8 @@ def iterate(
 
 def _supersede(old_file: str | None, new: DataFrame) -> str | None:
     """Delete ``old_file`` once ``new``'s reliable checkpoint is
-    written → the checkpoint file the next round supersedes."""
+    written → the checkpoint file the next round supersedes.  A no-op
+    on a local checkpoint, which has no file."""
     rdd = new._jdf.queryExecution().logical().rdd()
     new_file = rdd.getCheckpointFile()
     if not new_file.isDefined():
@@ -198,27 +198,30 @@ def label_fixpoint(
     return unchanged(fingerprint, fingerprint(labels), no_change)
 
 
-def truncate_lineage(
-    df: DataFrame,
-    checkpoint_dir: str | None = None,
-    eager: bool = False,
-) -> DataFrame:
-    """Lineage truncation with a durability switch (guide §5).
+def reliable(df: DataFrame) -> bool:
+    """Whether ``df``'s session checkpoints reliably: a checkpoint dir
+    is set (``spark.checkpoint.dir`` or ``sc.setCheckpointDir``)."""
+    return df.sparkSession.sparkContext.getCheckpointDir() is not None
 
-    Default (``checkpoint_dir=None``): ``localCheckpoint`` — blocks
-    live on executors, fast, free of distributed-FS round-trips, but
-    LOST with an executor; because the truncated frame has no lineage,
-    an executor loss mid-loop is unrecoverable.  Fine for local/bench
+
+def truncate_lineage(df: DataFrame, eager: bool = False) -> DataFrame:
+    """Lineage truncation whose durability is a session setting
+    (guide §5).
+
+    No checkpoint dir (the default): ``localCheckpoint`` — blocks live
+    on executors, fast, free of distributed-FS round-trips, but LOST
+    with an executor; because the truncated frame has no lineage, an
+    executor loss mid-loop is unrecoverable.  Fine for local/bench
     runs and for jobs whose restart cost is acceptable.
 
-    With ``checkpoint_dir`` set: a RELIABLE ``checkpoint()`` to that
-    filesystem dir (HDFS/S3 on a cluster) — iteration state survives
-    executor loss, the 1000-executor recipe SCALING.md prescribes.  The
-    checkpointed RDD is not persisted first, so writing the checkpoint
-    computes the frame a second time.  The dir is set once per session
-    (:func:`_use_checkpoint_dir`); :func:`iterate` deletes a loop's
-    superseded round checkpoints, and others are removed once
-    unreferenced (``cleanCheckpoints`` in ``session.get_spark``).
+    With a checkpoint dir on the session (:func:`reliable`): a RELIABLE
+    ``checkpoint()`` to that filesystem dir (HDFS/S3 on a cluster) —
+    iteration state survives executor loss, the 1000-executor recipe
+    SCALING.md prescribes.  The checkpointed RDD is not persisted
+    first, so writing the checkpoint computes the frame a second time.
+    :func:`iterate` deletes a loop's superseded round checkpoints, and
+    others are removed once unreferenced (``cleanCheckpoints`` in
+    ``session.get_spark``).
 
     ``eager=False`` saves only the eager form's extra job over the
     finished frame, not the work below it: under AQE the call builds
@@ -227,24 +230,9 @@ def truncate_lineage(
     ``pagerank()`` at sf0.1 on ``local[4]`` runs 50 jobs while its loop
     is being built and 2 on the ``count()`` after it.
     """
-    if checkpoint_dir is None:
-        return df.localCheckpoint(eager=eager)
-    _use_checkpoint_dir(df.sparkSession.sparkContext, checkpoint_dir)
-    return df.checkpoint(eager=eager)
-
-
-def _use_checkpoint_dir(sc, checkpoint_dir: str) -> None:
-    """Point ``sc`` at ``checkpoint_dir`` unless it already checkpoints
-    there: each ``setCheckpointDir`` call creates a fresh UUID
-    subdirectory, so a per-round call left one directory per round."""
-    current = sc.getCheckpointDir()
-    if current is not None:
-        path = sc._jvm.org.apache.hadoop.fs.Path
-        want = path(checkpoint_dir)
-        want = want.getFileSystem(sc._jsc.hadoopConfiguration()).makeQualified(want)
-        if path(current).getParent().equals(want):
-            return
-    sc.setCheckpointDir(checkpoint_dir)
+    if reliable(df):
+        return df.checkpoint(eager=eager)
+    return df.localCheckpoint(eager=eager)
 
 
 def _row_salt(

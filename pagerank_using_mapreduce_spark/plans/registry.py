@@ -497,8 +497,9 @@ def q_i3_warm_start(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Warm-start restartability proof: 4 iterations, then resume the
     loop from those ranks for 6 more — must hash-match the straight
     10-iteration unroll (the oracle is _rank_ctes(10) verbatim).  This
-    is the property that makes the reliable-checkpoint recipe
-    (`checkpoint_dir=`) a real resume path at 100 TB, not a rerun."""
+    is the property that makes the reliable-checkpoint recipe (a
+    session with `spark.checkpoint.dir` set) a real resume path at
+    100 TB, not a rerun."""
     from ..operators.pagerank import pagerank as pr
 
     pages = _pages(spark, sf_dir)

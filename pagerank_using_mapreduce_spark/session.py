@@ -66,9 +66,9 @@ def get_spark(
             or os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
         )
         .config("spark.sql.warehouse.dir", warehouse_dir)
-        # reliable loop checkpoints (scale.truncate_lineage with a dir)
-        # are deleted once their RDD is garbage-collected instead of
-        # accumulating, one directory per round, until the dir is wiped
+        # reliable loop checkpoints (scale.truncate_lineage on a session
+        # with spark.checkpoint.dir set) are deleted once their RDD is
+        # garbage-collected instead of accumulating until the dir is wiped
         .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
     )
     spark = builder.getOrCreate()

@@ -12,6 +12,16 @@ def spark():
     s.stop()
 
 
+@pytest.fixture
+def reliable_checkpoints(spark, tmp_path):
+    """The session checkpoints reliably into ``tmp_path`` (yielded) for
+    the test, then goes back to local checkpoints."""
+    sc = spark.sparkContext
+    sc.setCheckpointDir(str(tmp_path))
+    yield str(tmp_path)
+    sc.setCheckpointDir(None)
+
+
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_ORACLE = "/root/testdata/sf0.01"
 

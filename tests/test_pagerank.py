@@ -213,24 +213,25 @@ def test_personalized_pagerank_broadcast_seed_path(spark):
     pages.unpersist()
 
 
-def test_pagerank_reliable_checkpoint_dir(spark, tmp_path):
-    """checkpoint_dir switches localCheckpoint -> reliable checkpoint():
-    same ranks, and RDD checkpoint files actually land in the dir."""
+def test_pagerank_reliable_checkpoint_dir(spark, request):
+    """A session checkpoint dir switches localCheckpoint -> reliable
+    checkpoint(): same ranks, and RDD checkpoint files actually land in
+    the dir."""
     import os
 
     from pagerank_using_mapreduce_spark.sources.tables import load_table
     from pagerank_using_mapreduce_spark.sources.wikicorpus import wiki_corpus
 
-    ckpt = str(tmp_path / "ckpt")
     docs = load_table(spark, "/root/testdata/sf0.001", "documents")
     pages = parse_corpus(wiki_corpus(docs, docs.count())).persist()
-    reliable = pagerank(pages, iterations=6, checkpoint_dir=ckpt)
+    want = {r["title"]: r["rank"]
+            for r in pagerank(pages, iterations=6).collect()}
+    ckpt = request.getfixturevalue("reliable_checkpoints")
+    reliable = pagerank(pages, iterations=6)
     got = {r["title"]: r["rank"] for r in reliable.collect()}
     # checkpoint files were written under the dir
     files = [os.path.join(dp, f) for dp, _, fs in os.walk(ckpt) for f in fs]
     assert files, "no reliable checkpoint files written"
-    want = {r["title"]: r["rank"]
-            for r in pagerank(pages, iterations=6).collect()}
     assert got == want
     pages.unpersist()
 

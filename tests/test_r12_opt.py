@@ -1,8 +1,8 @@
 """Focused tests for the round-12 optimization changes: reliable
-checkpoint_dir threading through every lineage-truncating loop (and the
-scale.iterate loop that carries it), the
-aggregate-based setsim prefix, measured-size streaming state
-partitions, and the keyed-default in undirected_edges."""
+checkpoints (a session setting) in every lineage-truncating loop and
+the scale.iterate loop that carries them, the aggregate-based setsim
+prefix, measured-size streaming state partitions, and the keyed-default
+in undirected_edges."""
 
 from __future__ import annotations
 
@@ -29,34 +29,28 @@ def _ckpt_files(d: str) -> list[str]:
     return [os.path.join(dp, f) for dp, _, fs in os.walk(d) for f in fs]
 
 
-def test_truncate_lineage_switch(spark, tmp_path):
-    """truncate_lineage: default is a localCheckpoint (no files);
-    with a dir, a reliable checkpoint whose files land in the dir."""
+def _checkpoint_file(df):
+    rdd = df._jdf.queryExecution().logical().rdd()
+    return rdd.getCheckpointFile()
+
+
+def test_truncate_lineage_switch(spark, request):
+    """truncate_lineage: a localCheckpoint (no file) by default; a
+    reliable checkpoint whose files land in the session's checkpoint
+    dir once one is set."""
     from pagerank_using_mapreduce_spark.operators.scale import (
         truncate_lineage,
     )
 
     df = spark.range(100).select(F.col("id").alias("x"))
-    local = truncate_lineage(df, None, eager=True)
+    local = truncate_lineage(df, eager=True)
     assert local.count() == 100
-    d = str(tmp_path / "tl")
-    reliable = truncate_lineage(df, d, eager=True)
+    assert not _checkpoint_file(local).isDefined()
+    d = request.getfixturevalue("reliable_checkpoints")
+    reliable = truncate_lineage(df, eager=True)
     assert reliable.count() == 100
+    assert _checkpoint_file(reliable).isDefined()
     assert _ckpt_files(d), "no reliable checkpoint files written"
-
-
-def test_truncate_lineage_sets_checkpoint_dir_once(spark, tmp_path):
-    """Every setCheckpointDir call creates a fresh UUID subdirectory;
-    repeated reliable truncations into one dir must reuse the first."""
-    from pagerank_using_mapreduce_spark.operators.scale import (
-        truncate_lineage,
-    )
-
-    d = str(tmp_path / "once")
-    df = spark.range(10)
-    for ckpt in (d, d, d + "/"):
-        assert truncate_lineage(df, ckpt, eager=True).count() == 10
-    assert len(os.listdir(d)) == 1
 
 
 def _rows(df) -> set:
@@ -97,6 +91,7 @@ def _truss(pages, **kw):
 
 _SEEDS = ["doc_1", "doc_2", "doc_3"]
 RELIABLE_LOOPS = {
+    "hits": _graph_loop("hits", iterations=5),
     "connected_components": _graph_loop("connected_components", iterations=3),
     "connected_components_until": _graph_loop("connected_components_until"),
     "connected_components_star": _graph_loop("connected_components_star"),
@@ -120,17 +115,23 @@ def sf_pages(spark):
     pages.unpersist()
 
 
+def _rdd_dirs(d: str) -> list[str]:
+    return [x for _, dn, _ in os.walk(d) for x in dn if x.startswith("rdd-")]
+
+
 @pytest.mark.parametrize("name", sorted(RELIABLE_LOOPS))
-def test_loop_reliable_checkpoint_dir(sf_pages, tmp_path, name):
-    """Every loop on scale.iterate with checkpoint_dir: identical
-    output to the default path, and checkpoint files in the dir."""
+def test_loop_reliable_checkpoint_dir(sf_pages, request, name):
+    """Every loop on a session with a checkpoint dir: identical output
+    to the default path, and only the last round or two on disk — each
+    superseded round's reliable checkpoint is deleted."""
     run = RELIABLE_LOOPS[name]
     want = _rows(run(sf_pages))
-    d = str(tmp_path / name)
+    d = request.getfixturevalue("reliable_checkpoints")
     # hold the frame: checkpoints are reclaimed once unreferenced
-    out = run(sf_pages, checkpoint_dir=d)
+    out = run(sf_pages)
     assert _rows(out) == want
     assert _ckpt_files(d), "no reliable checkpoint files written"
+    assert len(_rdd_dirs(d)) <= 2
     if name == "cluster_pairs":
         assert want == {
             (0, 0, True), (1, 1, True), (2, 1, False), (3, 1, False),
@@ -138,12 +139,8 @@ def test_loop_reliable_checkpoint_dir(sf_pages, tmp_path, name):
         }
 
 
-def _rdd_dirs(d: str) -> list[str]:
-    return [x for _, dn, _ in os.walk(d) for x in dn if x.startswith("rdd-")]
-
-
 def test_iterate_reclaims_superseded_checkpoints_and_resumes(
-    sf_pages, tmp_path
+    sf_pages, request
 ):
     """A reliable loop leaves only its last round on disk, and a loop
     resumed from round k's checkpointed state matches the straight run
@@ -151,21 +148,21 @@ def test_iterate_reclaims_superseded_checkpoints_and_resumes(
     from pagerank_using_mapreduce_spark.operators.pagerank import pagerank
 
     straight = sorted(pagerank(sf_pages, iterations=10).collect())
-    d = str(tmp_path / "straight")
-    ranks = pagerank(sf_pages, iterations=10, checkpoint_dir=d)
+    d = request.getfixturevalue("reliable_checkpoints")
+    ranks = pagerank(sf_pages, iterations=10)
     assert ranks.count() == len(straight)
     assert len(_rdd_dirs(d)) == 1
     assert sorted(ranks.collect()) == straight
 
-    k = str(tmp_path / "resume")
-    round4 = pagerank(sf_pages, iterations=4, checkpoint_dir=k)
-    resumed = pagerank(
-        sf_pages, iterations=6, init_ranks=round4, checkpoint_dir=k
-    )
+    round4 = pagerank(sf_pages, iterations=4)
+    before = set(_rdd_dirs(d))
+    assert len(before) == 2
+    resumed = pagerank(sf_pages, iterations=6, init_ranks=round4)
     assert sorted(resumed.collect()) == straight
     # round 4's state is the caller's: the resumed loop never deletes it
     assert round4.count() == len(straight)
-    assert len(_rdd_dirs(k)) == 2
+    after = set(_rdd_dirs(d))
+    assert before < after and len(after) == 3
 
 
 def test_iterate_stop_rule_and_flat_state(spark):
@@ -375,21 +372,24 @@ def test_measured_state_partitions_and_scoped_conf(spark):
 
 
 def test_hits_signature_dropped_dead_cadence_param(spark):
-    """ADVICE r11: hits' checkpoint_every was silently dead after the
-    per-iteration truncation landed — the parameter is gone, replaced
-    by checkpoint_dir."""
+    """hits' checkpoint_every was dead once every round truncated its
+    lineage, so the parameter is gone; checkpoint_dir went with it now
+    that reliable checkpoints are a session setting."""
     import inspect
 
     from pagerank_using_mapreduce_spark.operators.graph import hits
 
     params = inspect.signature(hits).parameters
     assert "checkpoint_every" not in params
-    assert "checkpoint_dir" in params
+    assert "checkpoint_dir" not in params
 
 
 LOOP_FAMILY = [
     # (module, function, positional parameters)
     ("pagerank", "pagerank", 1),
+    ("pagerank", "weighted_pagerank", 1),
+    ("pagerank", "personalized_pagerank", 2),
+    ("pagerank", "pagerank_until", 1),
     ("graph", "hits", 1),
     ("graph", "connected_components", 1),
     ("graph", "connected_components_until", 1),
@@ -413,9 +413,11 @@ LOOP_FAMILY = [
     "module,name,positional", LOOP_FAMILY, ids=[f for _, f, _ in LOOP_FAMILY]
 )
 def test_loop_knobs_are_keyword_only(module, name, positional):
-    """hits(pages, 10, "/tmp/x") used to bind the dir positionally;
-    every knob after the data arguments is keyword-only."""
+    """Every knob after the data arguments is keyword-only, and no loop
+    takes a durability knob: reliable checkpoints are a session
+    setting, and per-round truncation leaves no cadence to tune."""
     import importlib
+    import inspect
 
     fn = getattr(
         importlib.import_module(
@@ -425,3 +427,5 @@ def test_loop_knobs_are_keyword_only(module, name, positional):
     )
     with pytest.raises(TypeError):
         fn(*[None] * positional, 10)
+    params = inspect.signature(fn).parameters
+    assert not {"checkpoint_dir", "checkpoint_every"} & params.keys()
